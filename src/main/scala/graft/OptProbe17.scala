@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Scratch measurement main for the r17 optimization round (guide
   * §1): A/B the fused k-countDistinct Expand aggregation against the
-  * per-column single-distinct jobs, at any SF. Not a declared query. */
+  * per-column single-distinct jobs and `Stats.exactDistinctPerCol`
+  * (the long-form grouped aggregation; `percol` arg), at any SF. Not
+  * a declared query. */
 object OptProbe17 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
@@ -44,7 +46,7 @@ object OptProbe17 {
       Stats.parallelized(li).agg(aggs.head, aggs.tail: _*).first()
       ()
     }
-    if (which == "all" || which == "percol") timed("dis_percol_par8") {
+    if (which == "all" || which == "percol") timed("dis_longform") {
       Stats.exactDistinctPerCol(li, cols); ()
     }
     if (which == "all" || which == "percol_norep")

@@ -25,17 +25,12 @@ object PlanProbe {
       "spearman_ranked" -> ((s, dir) =>
         graft.profiler.Stats.spearmanRanked(li(s, dir), Core.floats)),
       // col_distinct / col_types / quality_suggest / profiler
-      // exact-distinct (r17): the per-column single-distinct job that
-      // replaced the fused k-countDistinct Expand aggregation — ONE
-      // representative column; every column runs this same plan
-      // concurrently (Stats.exactDistinctPerCol)
-      "distinct_percol" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
+      // exact-distinct: the grouped single-distinct aggregation over
+      // the long form (Stats.exactDistinctPerCol) — one plan for every
+      // column, whatever the column count
+      "distinct_long" -> ((s, dir) => {
         val df = li(s, dir)
-        val c = df.columns.head
-        df.select(col(c)).agg(count(col(c)).as("cnt"),
-          countDistinct(graft.profiler.Stats.orderable(df, c))
-            .as("dis"))
+        graft.profiler.Stats.distinctCounts(df, df.columns.toSeq)
       })
     )
   }

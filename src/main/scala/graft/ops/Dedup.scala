@@ -1125,7 +1125,13 @@ object Dedup {
     * bit-identical; sig5 only decorates the emitted value). Engine
     * note: Spark's levenshtein counts codepoints, DuckDB's bytes —
     * identical on this ASCII corpus; a non-ASCII deployment should
-    * verify parity or normalize first. */
+    * verify parity or normalize first.
+    *
+    * Eager scan: with `maxDistCap = None` the tight cap comes from
+    * [[fuzzyCap]], a `max(length(text))` action that runs over `df`
+    * when this method BUILDS the plan — before, and whether or not,
+    * the returned DataFrame is executed, and again on every rebuild.
+    * Pass `maxDistCap` to keep plan construction lazy. */
   def fuzzyPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, blockJaccard: Double = 0.3, maxNormDist: Double = 0.05,
       maxDf: Option[Long] = None, maxDistCap: Option[Int] = None)
@@ -1140,7 +1146,9 @@ object Dedup {
     * the banded MinHash path ([[minhashVerifiedPairs]] at the block
     * threshold) instead of the Σdf² inverted-index join — identical
     * kept set wherever banding recall is 1 at the block threshold
-    * (the declared gate pins it), linear candidate generation. */
+    * (the declared gate pins it), linear candidate generation. Same
+    * eager [[fuzzyCap]] scan at plan-build time when `maxDistCap` is
+    * None (see [[fuzzyPairs]]). */
   def fuzzyPairsBanded(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, blockJaccard: Double = 0.3, maxNormDist: Double = 0.05,
       maxDf: Option[Long] = None, maxDistCap: Option[Int] = None,

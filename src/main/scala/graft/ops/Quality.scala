@@ -236,8 +236,8 @@ object Quality {
 
     // r17: the EXACT arm's k countDistinct expressions ran in one agg
     // — an Expand multiplying every row (k+1)× (the col_distinct
-    // lesson). They now run as per-column single-distinct jobs
-    // (Stats.exactDistinctPerCol — no Expand, column-pruned scans);
+    // lesson). They now run as one grouped single-distinct agg over
+    // the long form (Stats.exactDistinctPerCol — no Expand);
     // values identical (count/countDistinct are order-independent and
     // every suggest column is an orderable type). The approx arm (HLL,
     // Expand-free) stays fused in the one scan.

@@ -114,21 +114,32 @@ case class TableProfile(
   *   pass A: one wide agg — counts, moments, zeros, date min/max for
   *           every column (partial/final hash aggregation, whole-stage
   *           codegen); HLL++ distincts fuse in here, while EXACT
-  *           countDistinct runs as its own pass (k distinct aggs plan
-  *           an Expand that multiplies rows (k+1)× — fusing the cheap
-  *           aggregates into that stream measured ~2× slower);
-  *   pass B: one agg with all columns' percentiles;
-  *   pass C: shuffle-free conditional-sum histograms (reusing pass
-  *           A's bounds) + one unpivot/groupBy for all frequency
+  *           countDistinct runs as its own long-form pass (below);
+  *   pass B: all columns' percentiles (and the Spearman grid cuts);
+  *   pass C: histograms (reusing pass A's bounds) and frequency
   *           tables (results bounded by k·max(bins, topK) rows);
   *   pass D: all k(k−1)/2 Pearson correlations from central co-moment
   *           sums.
   *
-  * Every wide aggregation runs through bounded-size chunks (several
-  * scans instead of one enormous plan past a few hundred columns),
-  * and every result collected to the driver is O(k) — never
-  * proportional to row count — so the same plans hold at 100 TB with
-  * `exactQuantiles=false, exactDistinct=false` (sketch-based paths).
+  * The exact distinct, quantile, histogram and frequency passes run
+  * on the LONG FORM ([[Stats.longForm]]): one explode of each row to
+  * (col_idx, value), fused into the scan's codegen stage, feeding a
+  * grouped aggregation — groupBy(col_idx) + countDistinct over typed
+  * slots; groupBy(col_idx) + exact/approx percentiles, final merges
+  * parallel across columns; groupBy(col_idx, bin); groupBy(col_idx,
+  * value) + row_number ≤ topK with `__other__` = pass A's non-null
+  * count − Σ top-k. Spark's JVM-wide codegen cache holds 100 classes,
+  * so a pass's plan shape must not depend on the schema: the long
+  * form compiles the same operators for 11 or 500 columns, where one
+  * job per column or k·bins conditional sums compiled more classes
+  * than the cache holds and recompiled them on every warm profile.
+  *
+  * The wide single-row aggregations (A, A2) run through bounded-size
+  * chunks (several scans instead of one enormous plan past a few
+  * hundred columns), and every result collected to the driver is
+  * O(k) — never proportional to row count — so the same plans hold at
+  * 100 TB with `exactQuantiles=false, exactDistinct=false`
+  * (sketch-based paths).
   */
 object Profiler {
 
@@ -208,11 +219,10 @@ object Profiler {
         tagPass(df, "passA-base")
         chunkedAgg(df, aggsA, chunk = 600)
       }
-      // exact distincts in their own pass: r17 — per-column single-
-      // distinct jobs (Stats.exactDistinctPerCol; no Expand: partial
-      // agg keyed on the value, exchange of distinct values only,
-      // each job reads one column's parquet pages). Replaces the r16
-      // 64-column Expand chunk that measured ~280 s at 60M rows.
+      // exact distincts in their own pass: one grouped single-
+      // distinct aggregation over the long form
+      // (Stats.exactDistinctPerCol — no Expand, one job set for any
+      // column count).
       val fDis: Future[Map[String, Any]] =
         if (!cfg.exactDistinct) Future.successful(Map.empty)
         else Future {
@@ -221,51 +231,25 @@ object Profiler {
             case (c, (_, dis)) => s"dis__$c" -> (dis: Any)
           }
         }
-      // ---- pass B: all quantiles in one agg ----
+      // ---- pass B: all quantiles in one grouped agg ----
       // The Spearman grid cuts ride in the SAME scan (one extra
-      // percentile_approx per numeric column — cheap next to the
-      // exact percentile buffers), so pass D2 only pays its
-      // rank/co-moment pass instead of a dedicated grid aggregation.
+      // percentile_approx — cheap next to the exact percentile
+      // buffers), so pass D2 only pays its rank/co-moment pass
+      // instead of a dedicated grid aggregation.
       val wsg = cfg.spearman && !cfg.exactSpearman && numCols.size >= 2
-      val gridPs: Seq[Double] =
-        (0 to cfg.spearmanGrid).map(_.toDouble / cfg.spearmanGrid)
       val fB: Future[(Map[String, Seq[Double]],
           Map[String, Array[Double]])] =
         if (numCols.isEmpty) Future.successful((Map.empty, Map.empty))
         else Future {
           tagPass(df, "passB-quantiles")
-          val arr =
-            Stats.Ps.map(p => s"${p}D").mkString("array(", ", ", ")")
-          val aggsB = numCols.map { c =>
-            val useApprox =
-              if (cfg.quantilesByDtype)
-                !Kinds.isIntegral(df.schema(c).dataType)
-              else !cfg.exactQuantiles
-            if (useApprox)
-              expr(s"percentile_approx(cast(`$c` as double), $arr, " +
-                "10000)").as(s"q__$c")
-            else // r16: primitive buffer, value-identical
-              graft.functions.ExactPercentile.pctl(
-                col(c).cast("double"), Stats.Ps).as(s"q__$c")
-          } ++
-            (if (!wsg) Nil
-             else numCols.map(c => percentile_approx(
-               col(c).cast("double"), typedLit(gridPs), lit(2500))
-               .as(s"sg__$c")))
-          // chunked: each percentile agg buffers its column's values
-          // (exact path) — bounding aggs-per-scan bounds that memory;
-          // chunks run as concurrent jobs (chunkedAggPar).
-          val b = Stats.chunkedAggPar(df, aggsB,
-            chunk = math.max(1, (aggsB.size + 7) / 8))
-          def arrOf(key: String): Seq[Double] =
-            Option(b.getOrElse(key, null))
-              .map(_.asInstanceOf[scala.collection.Seq[Any]]
-                .map(x => Option(x).map(_.asInstanceOf[Double])
-                  .getOrElse(Double.NaN)).toSeq)
-              .getOrElse(Seq.empty)
-          (numCols.map(c => c -> arrOf(s"q__$c")).toMap,
-           if (!wsg) Map.empty[String, Array[Double]]
-           else numCols.map(c => c -> arrOf(s"sg__$c").toArray).toMap)
+          val useApprox = numCols.map { c =>
+            if (cfg.quantilesByDtype)
+              !Kinds.isIntegral(df.schema(c).dataType)
+            else !cfg.exactQuantiles
+          }
+          val gridPs = Option.when(wsg)(
+            (0 to cfg.spearmanGrid).map(_.toDouble / cfg.spearmanGrid))
+          quantilesLong(df, numCols, useApprox, gridPs)
         }
       val base = Await.result(fBase, Duration.Inf)
       def bLong(name: String): Long = base(name).asInstanceOf[Long]
@@ -301,6 +285,28 @@ object Profiler {
     assemble(df, cfg, aMap, momentMap, qMap,
       spearmanCutsOverride =
         if (withSpearmanGrid) Some(spearmanCuts) else None)
+  }
+
+  /** Pass B: the [[Stats.quantilesFrame]] rows collected per column
+    * to (percentiles, Spearman grid cuts; empty without `gridPs`). A
+    * column with no non-null value gets empty values (the wide agg's
+    * null). */
+  private[graft] def quantilesLong(df: DataFrame, numCols: Seq[String],
+      useApprox: Seq[Boolean], gridPs: Option[Seq[Double]])
+      : (Map[String, Seq[Double]], Map[String, Array[Double]]) = {
+    val rows = Stats.quantilesFrame(df, numCols, useApprox, gridPs)
+      .collect().map(r => r.getInt(0) -> r).toMap
+    def arrOf(i: Int, name: String): Seq[Double] =
+      rows.get(i)
+        .flatMap(r => Option(r.getAs[scala.collection.Seq[Any]](name)))
+        .map(_.map(x => Option(x).map(_.asInstanceOf[Double])
+          .getOrElse(Double.NaN)).toSeq)
+        .getOrElse(Seq.empty)
+    (numCols.indices.map(i =>
+      numCols(i) -> arrOf(i, if (useApprox(i)) "qa" else "qe")).toMap,
+     if (gridPs.isEmpty) Map.empty
+     else numCols.indices.map(i => numCols(i) -> arrOf(i, "sg").toArray)
+       .toMap)
   }
 
   /** Whole-table profile in ONE input scan for all scannable
@@ -527,35 +533,40 @@ object Profiler {
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
     val (histRows, freqRows, corrM, catAssoc0, spearmanM) = try {
+    val hCols = numCols ++ dateColsA
     val fHist: Future[Map[String, Seq[(Long, Long)]]] =
-      histOverride.map(Future.successful).getOrElse(Future {
+      if (hCols.isEmpty) Future.successful(Map.empty)
+      else histOverride.map(Future.successful).getOrElse(Future {
         tagPass(df, "passC-histograms")
-        // chunked by column group: bins·k conditional sums per scan
-        // otherwise (wide-table plan blowup, as chunkedAgg)
-        (numCols ++ dateColsA).grouped(60).flatMap { g =>
-          Stats.histogramWithBounds(histSrc, g, cfg.bins, mnMap, mxMap)
-            .collect()
-            .groupBy(_.getString(0))
-            .map { case (k, rs) =>
-              k -> rs.map(r =>
-                (r.getAs[Long]("bin"), r.getAs[Long]("cnt")))
-                .toSeq.sortBy(_._1)
-            }
-        }.toMap
+        // one groupBy(col_idx, bin) over the long form for all
+        // columns; the grid fills the empty buckets driver-side
+        val cells = Stats.histogramCounts(histSrc, hCols, cfg.bins,
+          mnMap, mxMap).collect()
+          .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+        Stats.histogramBins(hCols, cfg.bins, mnMap, mxMap)
+          .flatMap { case (i, c, b, _, _, keepEmpty) =>
+            val cnt = cells.getOrElse((i, b), 0L)
+            if (cnt > 0 || keepEmpty) Some(c -> ((b, cnt))) else None
+          }
+          .groupBy(_._1).map { case (c, bs) => c -> bs.map(_._2) }
       })
     val catColsS = Kinds.catCols(df)
     val fFreq: Future[Map[String, Seq[(String, Long)]]] =
       if (catColsS.isEmpty) Future.successful(Map.empty)
       else Future {
         tagPass(df, "passC-freq")
-        Stats.freq(df, catColsS, cfg.topK).collect()
-          .groupBy(_.getString(0))
-          .map { case (k, rs) =>
-            k -> rs.sortBy(_.getAs[Long]("rnk"))
-              .map(r =>
-                (r.getAs[String]("value"), r.getAs[Long]("cnt")))
-              .toSeq
+        // top-k per column over the long form; the `__other__`
+        // remainder is pass A's non-null count minus Σ top-k
+        val top = Stats.topValues(Stats.freqCounts(df, catColsS), cfg.topK)
+          .collect().groupBy(_.getAs[Int]("col_idx"))
+        catColsS.zipWithIndex.flatMap { case (c, i) =>
+          top.get(i).map { rs =>
+            val vals = rs.sortBy(_.getAs[Long]("rnk")).toSeq
+              .map(r => (r.getAs[String]("value"), r.getAs[Long]("cnt")))
+            val other = aLong(s"cnt__$c") - vals.map(_._2).sum
+            c -> (if (other > 0) vals :+ (("__other__", other)) else vals)
           }
+        }.toMap
       }
     // ---- pass D: correlations + rejection — one co-moment scan
     // (the oracle-parity two-pass plan lives on in Stats.corrMatrix,

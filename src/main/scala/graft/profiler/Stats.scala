@@ -187,47 +187,107 @@ object Stats {
     }
   }
 
-  /** Exact (non-null count, distinct count) per column: ONE single-
-    * distinct aggregation JOB PER COLUMN, submitted concurrently —
-    * replacing one fused agg carrying k countDistinct expressions.
-    *
-    * k distinct aggregates in one Aggregate make Catalyst plan an
-    * Expand that multiplies every input row (k+1)× through a single
-    * partial hash aggregate with 2k+ buffer fields — measured ~280 s
-    * for 12 columns over 60M rows (sf10, r16), the largest single-
-    * operator cost in the repo. A single-distinct agg plans Spark's
-    * Expand-free form instead: partial aggregate KEYED ON THE VALUE
-    * (map-side dedup) → exchange of the distinct values only → merge
-    * → final count. Each job also reads ONLY its column's parquet
-    * pages (the fused scan decodes all k for every expanded row), and
-    * per-task hash state is one column's values, not k wide buffers
-    * (guide §2.3 shuffle fewer bytes / §2.5 two-level aggregation).
-    * Both aggregates are order-independent, so the values are
-    * identical to the fused form's. `maxPar` bounds in-flight jobs
-    * (guide §2.6). */
-  def exactDistinctPerCol(df: DataFrame, cols: Seq[String],
-      maxPar: Int = 8): Map[String, (Long, Long)] = {
+  // -------------------------------------------------------------------
+  // Long form: the exact profile's distinct, quantile, histogram and
+  // frequency passes each unpivot the table to one (col_idx, v) row
+  // per non-null cell and aggregate grouped by col_idx. Each pass's
+  // plan SHAPE is then the same for 11 or 500 columns of any type mix:
+  // a fixed set of operators and whole-stage-codegen classes, where a
+  // per-column form (one job per column, or k·bins conditional sums)
+  // grows both with the schema. Spark's JVM-wide codegen cache holds
+  // 100 classes (spark.sql.codegen.cache.maxEntries), so a profile
+  // whose class count grows with the schema evicts and recompiles its
+  // own classes on every warm run.
+  // -------------------------------------------------------------------
+
+  /** ONE explode of each row to (col_idx, v): `values(i)` becomes the
+    * row (i, values(i)), null values dropped. All `values` share one
+    * data type. The explode is map-side — it fuses into the scan's
+    * codegen stage and feeds the partial aggregation directly. */
+  private[graft] def longForm(df: DataFrame, values: Seq[Column])
+      : DataFrame =
+    df.select(explode(array(values.zipWithIndex.map { case (v, i) =>
+      struct(lit(i).as("col_idx"), v.as("v"))
+    }: _*)).as("r"))
+      .select(col("r.col_idx").as("col_idx"), col("r.v").as("v"))
+      .where(col("v").isNotNull)
+
+  /** Typed slots for a mixed-type [[longForm]]: one struct field per
+    * distinct data type among `cols` (map columns as their [[orderable]]
+    * string), column c's value in its type's field and null in the
+    * others; the struct is null when c is null. Two slot structs are
+    * equal iff the values are, so grouping or counting distinct over
+    * the struct is grouping over the value (Spark normalizes −0.0/NaN
+    * inside struct grouping keys as it does for a bare double). */
+  private[graft] def slotted(df: DataFrame, cols: Seq[String])
+      : Seq[Column] = {
+    val typeOf = cols.map { c =>
+      val dt = df.schema(c).dataType
+      if (Kinds.isOrderable(dt)) dt else StringType
+    }
+    val slots = typeOf.distinct
+    cols.zip(typeOf).map { case (c, t) =>
+      when(col(c).isNotNull, struct(slots.zipWithIndex.map { case (s, j) =>
+        (if (s == t) orderable(df, c) else lit(null).cast(s)).as(s"s$j")
+      }: _*))
+    }
+  }
+
+  /** Exact (non-null count, distinct count) per column in ONE grouped
+    * single-distinct aggregation over the [[slotted]] [[longForm]]:
+    * partial aggregate keyed on (col_idx, value) in the scan stage
+    * (map-side dedup) → exchange of distinct values only → merge →
+    * count per col_idx. No Expand (k countDistinct expressions in one
+    * Aggregate multiply every row (k+1)× through 2k+ buffer fields —
+    * ~280 s for 12 columns over 60M rows), and no per-column jobs (a
+    * job per column re-plans and recompiles per column). Both
+    * aggregates are order-independent, so the values equal
+    * `count(c)`/`countDistinct(orderable(c))` per column. */
+  def exactDistinctPerCol(df: DataFrame, cols: Seq[String])
+      : Map[String, (Long, Long)] = {
     if (cols.isEmpty) return Map.empty
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(cols.size, maxPar))
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      // NO parallelized() here (measured r17, OptProbe17 at sf0.1/32c:
-      // 0.6–0.8 s without vs 2.3–3.2 s with): the concurrent jobs
-      // already fill the cores when the scan cannot split, and the
-      // repartition adds an exchange + a df.rdd planning probe to
-      // every per-column job; on a splittable tier the scan is
-      // data-parallel on its own.
-      val futs = cols.map { c => Future {
-        val r = df.select(col(c)).agg(count(col(c)).as("cnt"),
-          countDistinct(orderable(df, c)).as("dis")).first()
-        c -> (r.getLong(0), r.getLong(1))
-      } }
-      Await.result(Future.sequence(futs),
-        scala.concurrent.duration.Duration.Inf).toMap
-    } finally pool.shutdown()
+    val got = distinctCounts(df, cols).collect()
+      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    cols.zipWithIndex.map { case (c, i) =>
+      c -> got.getOrElse(i, (0L, 0L))
+    }.toMap
+  }
+
+  /** (col_idx, cnt, dis) rows of [[exactDistinctPerCol]]; columns with
+    * no non-null value have no row. */
+  private[graft] def distinctCounts(df: DataFrame, cols: Seq[String])
+      : DataFrame =
+    longForm(df, slotted(df, cols)).groupBy("col_idx")
+      .agg(count(lit(1)).as("cnt"), countDistinct(col("v")).as("dis"))
+
+  /** The exact profile's pass B over the [[longForm]] of the
+    * double-cast columns: per col_idx, the [[Ps]] percentiles — exact
+    * ([[graft.functions.ExactPercentile]], column "qe") or
+    * percentile_approx at accuracy 10000 where `useApprox(i)` ("qa")
+    * — and, with `gridPs`, the Spearman grid cuts (percentile_approx
+    * at 2500, "sg"), all in ONE groupBy(col_idx) whatever the column
+    * count. Each task's partial buffer for a column holds what the
+    * wide single-row agg's did (the column's values in row order),
+    * and the final merges run in parallel across the hash-partitioned
+    * col_idx keys instead of one single-task merge per job. */
+  private[graft] def quantilesFrame(df: DataFrame, cols: Seq[String],
+      useApprox: Seq[Boolean], gridPs: Option[Seq[Double]]): DataFrame = {
+    val i = col("col_idx")
+    val v = col("v")
+    def only(approx: Boolean) =
+      if (useApprox.forall(_ == approx)) v
+      else when(typedLit(useApprox).getItem(i) === approx, v)
+    val aggs =
+      (if (useApprox.contains(false))
+        Seq(graft.functions.ExactPercentile.pctl(only(false), Ps).as("qe"))
+       else Nil) ++
+      (if (useApprox.contains(true))
+        Seq(percentile_approx(only(true), typedLit(Ps), lit(10000))
+          .as("qa"))
+       else Nil) ++
+      gridPs.map(ps =>
+        percentile_approx(v, typedLit(ps), lit(2500)).as("sg")).toSeq
+    longForm(df, cols.map(d)).groupBy(i).agg(aggs.head, aggs.tail: _*)
   }
 
   // -------------------------------------------------------------------
@@ -255,10 +315,10 @@ object Stats {
   def distinct(df: DataFrame, cols: Seq[String], approx: Boolean = false)
       : DataFrame = {
     if (!approx) {
-      // r17: per-column single-distinct jobs (no Expand — see
-      // exactDistinctPerCol); the derived stats are computed by the
-      // SAME Column expressions as before, over a local (c, cnt, dis)
-      // relation, so every value is identical
+      // one grouped single-distinct agg over the long form (no
+      // Expand — see exactDistinctPerCol); the derived stats are
+      // computed by the SAME Column expressions as before, over a
+      // local (c, cnt, dis) relation, so every value is identical
       val m = exactDistinctPerCol(df, cols)
       val spark = df.sparkSession
       import spark.implicits._
@@ -293,8 +353,8 @@ object Stats {
   // Type inference (C5, U1, U2): dtype bucket + CONST/UNIQUE overrides.
   // -------------------------------------------------------------------
   def kinds(df: DataFrame, cols: Seq[String]): DataFrame = {
-    // r17: per-column single-distinct jobs (no Expand — see
-    // exactDistinctPerCol). The CONST/UNIQUE overrides are exact
+    // one grouped single-distinct agg over the long form (no Expand
+    // — see exactDistinctPerCol). The CONST/UNIQUE overrides are exact
     // integer comparisons on the same (cnt, dis) longs the fused agg
     // produced, so the kinds are identical.
     val m = exactDistinctPerCol(df, cols)
@@ -619,10 +679,11 @@ object Stats {
       : DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // r17: exact countDistinct as per-column single-distinct jobs (no
-    // Expand — see exactDistinctPerCol); the sketches fuse in one
-    // Expand-free scan (declarative HLL + imperative KMV mix fine
-    // under ObjectHashAggregate), order-independent → parallelized()
+    // exact countDistinct as one grouped single-distinct agg over the
+    // long form (no Expand — see exactDistinctPerCol); the sketches
+    // fuse in one Expand-free scan (declarative HLL + imperative KMV
+    // mix fine under ObjectHashAggregate), order-independent →
+    // parallelized()
     val exactPerCol = exactDistinctPerCol(df, cols)
     val exacts: Map[String, Any] = exactPerCol.map {
       case (c, (_, dis)) => s"ex__$c" -> (dis: Any)
@@ -971,56 +1032,66 @@ object Stats {
 
   /** Histogram with already-known per-column bounds (Profiler reuses
     * pass A's min/max so the whole profile stays at a fixed job
-    * count — no redundant scan). */
+    * count — no redundant scan): the [[histogramCounts]] long-form
+    * counts joined onto the [[histogramBins]] grid (≤ k·bins rows). */
   def histogramWithBounds(df: DataFrame, cols: Seq[String], bins: Int,
       mnMap: Map[String, Double], mxMap: Map[String, Double])
       : DataFrame = {
-    // Bin per row once, then `bins` conditional sums per column in ONE
-    // shuffle-free aggregation — no row explosion, stays inside
-    // whole-stage codegen (vs an explode→groupBy, which multiplies
-    // rows k× before a shuffle; at 100 TB that shuffle dominates).
-    val binCols = cols.map { c =>
-      val mn = mnMap(c); val mx = mxMap(c)
-      val w = (mx - mn) / bins.toDouble
-      // the isNotNull guard matters in BOTH branches: least(null, 9)
-      // returns 9 (least skips nulls), which would count null rows
-      // into the top bin
-      val bin =
-        if (mn.isNaN || mn == mx)
-          when(col(c).isNotNull && !isnan(d(c)), lit(0L))
-        else when(col(c).isNotNull && !isnan(d(c)),
-          least(floor((d(c) - lit(mn)) / lit(w)), lit(bins - 1L)))
-      bin.as(s"bin__$c")
-    }
-    val binned = df.select(binCols: _*)
-    val aggs = cols.flatMap { c =>
-      (0 until bins).map { b =>
-        coalesce(sum(when(col(s"bin__$c") === b, 1L).otherwise(0L)),
-          lit(0L)).as(s"h__${c}__$b")
-      }
-    }
-    val row = binned.agg(aggs.head, aggs.tail: _*)
-    val structs = cols.flatMap { c =>
-      val mn = mnMap(c)
-      val w = (mxMap(c) - mnMap(c)) / bins.toDouble
-      // upstream's create_hist_data (≈L62–115) emits ALL `bins`
-      // buckets including empty ones; keep that parity whenever the
-      // bounds are well-formed. Degenerate columns (all-null/all-NaN
-      // → NaN bounds, or min==max → zero width) have no meaningful
-      // edges, so only their non-empty buckets are emitted.
-      val wellFormed = !mn.isNaN && w > 0
-      (0 until bins).map { b =>
-        struct(lit(c).as("col_name"), lit(b.toLong).as("bin"),
-          col(s"h__${c}__$b").as("cnt"),
-          lit(mn + b.toDouble * w).as("bin_lo"),
-          lit(mn + (b + 1).toDouble * w).as("bin_hi"),
-          lit(wellFormed).as("__keep_empty"))
-      }
-    }
-    row.select(explode(array(structs: _*)).as("s")).select("s.*")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val grid = histogramBins(cols, bins, mnMap, mxMap)
+      .toDF("col_idx", "col_name", "bin", "bin_lo", "bin_hi",
+        "__keep_empty")
+    grid.join(histogramCounts(df, cols, bins, mnMap, mxMap),
+      Seq("col_idx", "bin"), "left")
+      .select(col("col_name"), col("bin"),
+        coalesce(col("cnt"), lit(0L)).as("cnt"), col("bin_lo"),
+        col("bin_hi"), col("__keep_empty"))
       .where(col("cnt") > 0 || col("__keep_empty"))
       .drop("__keep_empty")
       .orderBy("col_name", "bin")
+  }
+
+  /** The histogram grid: (col_idx, col_name, bin, bin_lo, bin_hi,
+    * keep_empty) for every column and bucket. Upstream's
+    * create_hist_data (≈L62–115) emits ALL `bins` buckets including
+    * empty ones; keep that parity whenever the bounds are well-formed.
+    * Degenerate columns (all-null/all-NaN → NaN bounds, or min==max →
+    * zero width) have no meaningful edges, so only their non-empty
+    * buckets are kept (keep_empty false). */
+  private[graft] def histogramBins(cols: Seq[String], bins: Int,
+      mnMap: Map[String, Double], mxMap: Map[String, Double])
+      : Seq[(Int, String, Long, Double, Double, Boolean)] =
+    cols.zipWithIndex.flatMap { case (c, i) =>
+      val mn = mnMap(c)
+      val w = (mxMap(c) - mn) / bins.toDouble
+      val wellFormed = !mn.isNaN && w > 0
+      (0 until bins).map { b =>
+        (i, c, b.toLong, mn + b.toDouble * w, mn + (b + 1).toDouble * w,
+          wellFormed)
+      }
+    }
+
+  /** Non-empty (col_idx, bin, cnt) histogram cells: the [[longForm]]
+    * of the double-cast columns, each non-NaN value binned as
+    * floor((v − mn)/w) capped at bins−1 (bin 0 when the bounds are
+    * degenerate), then ONE groupBy(col_idx, bin) count. The per-column
+    * bounds ride as array literals indexed by col_idx, so the
+    * generated code depends on neither the column count nor the
+    * data. */
+  private[graft] def histogramCounts(df: DataFrame, cols: Seq[String],
+      bins: Int, mnMap: Map[String, Double], mxMap: Map[String, Double])
+      : DataFrame = {
+    val mns = cols.map(mnMap)
+    val ws = cols.map(c => (mxMap(c) - mnMap(c)) / bins.toDouble)
+    val degenerate = cols.map(c => mnMap(c).isNaN || mnMap(c) == mxMap(c))
+    val i = col("col_idx")
+    val v = col("v")
+    val bin = when(typedLit(degenerate).getItem(i), lit(0L)).otherwise(
+      least(floor((v - typedLit(mns).getItem(i)) / typedLit(ws).getItem(i)),
+        lit(bins - 1L)))
+    longForm(df, cols.map(d)).where(!isnan(v))
+      .groupBy(i, bin.as("bin")).agg(count(lit(1)).as("cnt"))
   }
 
   /** String-pattern (mask) profile: each value mapped to its
@@ -1104,21 +1175,12 @@ object Stats {
 
   // -------------------------------------------------------------------
   // Frequency tables (F1/F2): top-k values per categorical column with
-  // deterministic (count desc, value asc) tie-break. Unpivot → ONE
+  // deterministic (count desc, value asc) tie-break. Long form → ONE
   // groupBy + one window for all columns.
   // -------------------------------------------------------------------
   def freq(df: DataFrame, cols: Seq[String], topK: Int = 10): DataFrame = {
-    val structs = cols.map(c =>
-      struct(lit(c).as("col_name"), col(c).cast("string").as("value")))
-    val unpivoted = df.select(explode(array(structs: _*)).as("s"))
-      .select("s.*").where(col("value").isNotNull)
-    val counted = unpivoted.groupBy("col_name", "value").count()
-      .withColumnRenamed("count", "cnt")
-    val w = Window.partitionBy("col_name")
-      .orderBy(col("cnt").desc, col("value").asc)
-    val top = counted
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= topK)
+    val counted = freqCounts(df, cols)
+    val top = topValues(counted, topK)
     // "other values" remainder bucket (upstream shows top-k plus an
     // aggregated other-count, base.py::describe_categorical_1d
     // ≈L210–230 + templates/freq_table.html): one row per column with
@@ -1130,16 +1192,38 @@ object Stats {
     // upstream partition thanks to WindowGroupLimit pushdown, but a
     // rnk>topK branch would force ranking every distinct value of a
     // column through one partition (fatal for a near-unique column at
-    // corpus scale).
-    val totals = counted.groupBy("col_name").agg(sum("cnt").as("total"))
-    val topSums = top.groupBy("col_name").agg(sum("cnt").as("topsum"))
-    val other = totals.join(topSums, Seq("col_name"))
-      .select(col("col_name"), lit("__other__").as("value"),
+    // corpus scale). The Profiler takes the totals from pass A's
+    // non-null counts instead and skips this join.
+    val totals = counted.groupBy("col_idx").agg(sum("cnt").as("total"))
+    val topSums = top.groupBy("col_idx").agg(sum("cnt").as("topsum"))
+    val other = totals.join(topSums, Seq("col_idx"))
+      .select(col("col_idx"), lit("__other__").as("value"),
         (col("total") - col("topsum")).as("cnt"),
         lit(topK + 1L).as("rnk"))
       .where(col("cnt") > 0)
     top.unionByName(other)
+      .select(typedLit(cols).getItem(col("col_idx")).as("col_name"),
+        col("value"), col("cnt"), col("rnk"))
       .orderBy("col_name", "rnk")
+  }
+
+  /** (col_idx, value, cnt) for every distinct non-null string-cast
+    * value: the [[longForm]] of the columns, one groupBy(col_idx,
+    * value) count. */
+  private[graft] def freqCounts(df: DataFrame, cols: Seq[String])
+      : DataFrame =
+    longForm(df, cols.map(c => col(c).cast("string")))
+      .groupBy(col("col_idx"), col("v").as("value"))
+      .agg(count(lit(1)).as("cnt"))
+
+  /** The `topK` most frequent values per col_idx of [[freqCounts]]
+    * output, ranked (cnt desc, value asc) into rnk 1..topK. */
+  private[graft] def topValues(counted: DataFrame, topK: Int)
+      : DataFrame = {
+    val w = Window.partitionBy("col_idx")
+      .orderBy(col("cnt").desc, col("value").asc)
+    counted.withColumn("rnk", row_number().over(w).cast("long"))
+      .where(col("rnk") <= topK)
   }
 
   /** Gini coefficient per numeric column — the inequality /

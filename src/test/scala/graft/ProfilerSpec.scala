@@ -246,4 +246,71 @@ class ProfilerSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("metric") === "median")
       .count() > 0)
   }
+
+  test("a warm profile loop recompiles nothing and its classes fit the " +
+      "codegen cache") {
+    // Spark's codegen cache is JVM-wide and holds 100 classes
+    // (spark.sql.codegen.cache.maxEntries): a profile loop needing
+    // more evicts its own classes and recompiles them on every warm
+    // run. The cache is an LRU split into 4 segments of 25 keyed by a
+    // hash of (class loader identity, code), so a loop needing fewer
+    // than 100 classes can still overflow one segment in some JVMs
+    // and not in others. The test therefore measures, in a fresh JVM
+    // with a cache that never evicts, how many classes one loop needs
+    // (every one a cache entry in the default JVM) and whether a
+    // warm loop generates any code the first did not.
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq.filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx2g",
+      "-Dspark.sql.codegen.cache.maxEntries=1000",
+      "-cp", System.getProperty("java.class.path"), "graft.CodegenLoop",
+      LongFormFixtures.lineitem)
+    val out = new StringBuilder
+    val code = scala.sys.process.Process(cmd)
+      .!(scala.sys.process.ProcessLogger(l => out ++= l + "\n", _ => ()))
+    assert(code == 0, out.toString)
+    val line = out.toString.linesIterator.find(_.startsWith("codegen "))
+    assert(line.isDefined, out.toString)
+    val Array(_, first, warm) = line.get.split(" ")
+    assert(warm.toLong == 0L, "warm loop generated new code")
+    assert(first.toLong < 100L,
+      s"one profile loop needs $first classes; the codegen cache holds 100")
+  }
+
+  test("long-form passes submit the same jobs for 11 and 33 columns") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val li = spark.read.parquet(LongFormFixtures.lineitem)
+    val base = li.columns.take(11).toSeq
+    val narrow = li.select(base.map(col): _*)
+    // the same type mix three times over
+    val wide = li.select((1 to 3).flatMap(k =>
+      base.map(c => col(c).as(s"${c}_$k"))): _*)
+    val tags = Seq("passA-distinct", "passB-quantiles",
+      "passC-histograms", "passC-freq").map(t => s"profile: $t")
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    def jobsPerTag(d: org.apache.spark.sql.DataFrame): Map[String, Int] = {
+      org.apache.spark.ListenerBusDrain(sc)
+      seen.clear()
+      Profiler.profile(d, ProfilerConfig())
+      org.apache.spark.ListenerBusDrain(sc)
+      val all = seen.asScala.toSeq
+      tags.map(t => t -> all.count(_ == t)).toMap
+    }
+    sc.addSparkListener(listener)
+    try {
+      val n11 = jobsPerTag(narrow)
+      val n33 = jobsPerTag(wide)
+      assert(tags.forall(t => n11(t) > 0), n11.toString)
+      assert(n11 == n33)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -45,6 +45,22 @@ class Round17OptSpec extends SparkSpec {
       assert(m(c)._1 == r.getAs[Long](s"cnt__$c"), s"cnt $c")
       assert(m(c)._2 == r.getAs[Long](s"dis__$c"), s"dis $c")
     }
+    // the long form's typed slots: −0.0/0.0, NaN, an all-null column,
+    // map, decimal, date, timestamp and boolean columns, and no rows
+    Seq(LongFormFixtures.edge(spark), LongFormFixtures.empty(spark))
+      .foreach { e =>
+        val ec = e.columns.toSeq
+        val em = Stats.exactDistinctPerCol(e, ec)
+        val eaggs = ec.flatMap { c =>
+          Seq(count(col(c)).as(s"cnt__$c"),
+            countDistinct(Stats.orderable(e, c)).as(s"dis__$c"))
+        }
+        val er = e.agg(eaggs.head, eaggs.tail: _*).first()
+        ec.foreach { c =>
+          assert(em(c) == ((er.getAs[Long](s"cnt__$c"),
+            er.getAs[Long](s"dis__$c"))), s"edge $c")
+        }
+      }
   }
 
   test("Stats.distinct exact arm matches the fused-agg form") {
@@ -105,10 +121,10 @@ class Round17OptSpec extends SparkSpec {
   test("fuzzyVerify auto-cap keeps the exact kept set and distances " +
       "at the ratio boundary") {
     import spark.implicits._
-    // 20-char base: one pair at exactly the 0.05 boundary (dist 1,
-    // longer len 20 → ratio 0.05, kept with ≤) and one just over
-    // (dist 2 → 0.10, dropped). Shared-vocab texts so the Jaccard
-    // block at 0.3 passes them into verification.
+    // 23-char base: one pair at exactly the 1/23 boundary (dist 1,
+    // longer len 23 → ratio 1/23, kept with ≤) and one just over
+    // (dist 2 → 2/23, dropped). Shared-vocab texts so the Jaccard
+    // block at 0.1 passes them into verification.
     val base = "aa bb cc dd ee ff gg hh"   // 23 chars
     val docs = Seq(
       (1L, base),

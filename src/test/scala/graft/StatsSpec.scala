@@ -162,6 +162,13 @@ class StatsSpec extends SparkSpec {
     assert(f.map(r => (r.getAs[String]("value"), r.getAs[Long]("cnt"),
       r.getAs[Long]("rnk"))).toSeq ==
       Seq(("a", 2L, 1L), ("b", 2L, 2L), ("__other__", 3L, 3L)))
+    // the profiler's table: same top-k core, __other__ from pass A's
+    // non-null count (nulls never count into the remainder)
+    val withNull = d2.union(df(Seq(Row(null), Row(null)), s))
+    val p = graft.profiler.Profiler.profile(withNull,
+      graft.profiler.ProfilerConfig(topK = 2))
+    assert(p.columns.head.topValues ==
+      Seq(("a", 2L), ("b", 2L), ("__other__", 3L)))
   }
 
   test("freq: no __other__ row when topK covers every value") {
@@ -169,6 +176,15 @@ class StatsSpec extends SparkSpec {
     val d2 = df(Seq("b", "a", "a").map(Row(_)), s)
     val f = Stats.freq(d2, Seq("c"), topK = 10).collect()
     assert(f.map(_.getAs[String]("value")).toSeq == Seq("a", "b"))
+    val p = graft.profiler.Profiler.profile(d2,
+      graft.profiler.ProfilerConfig(topK = 10))
+    assert(p.columns.head.topValues == Seq(("a", 2L), ("b", 1L)))
+    // exactly topK values: still no remainder row
+    val p2 = graft.profiler.Profiler.profile(d2,
+      graft.profiler.ProfilerConfig(topK = 2))
+    assert(p2.columns.head.topValues == Seq(("a", 2L), ("b", 1L)))
+    assert(Stats.freq(d2, Seq("c"), topK = 2).collect()
+      .map(_.getAs[String]("value")).toSeq == Seq("a", "b"))
   }
 
   test("kindCounts: every kind counted with CORR > CONST > UNIQUE " +
