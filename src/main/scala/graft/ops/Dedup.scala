@@ -137,9 +137,9 @@ object Dedup {
     // derives it three times per action (the hot-gram broadcast
     // build, the shingle-keyed self-join exchange, the id-keyed
     // sizes exchange), and the gram explode is the measured dominant
-    // cost of the family (OptProbe17 sf0.1/32c: 2.86 → 2.11 s warm).
-    // Values unchanged; storage is one copy of the same bytes every
-    // exchange already spills.
+    // cost of the family (OPTIMIZATION_r17.md §3, sf0.1/32c: 2.86 →
+    // 2.11 s warm). Values unchanged; storage is one copy of the same
+    // bytes every exchange already spills.
     val sh = Materialize.materialize(
       shingleIndex(df, idCol, textCol, n, maxDf))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))

@@ -67,7 +67,7 @@ object GraphOps {
     * damping contracts toward the stationary vector from ANY start,
     * and yesterday's ranks are already near it, so the refresh buys
     * most of a full rebuild's accuracy at a fraction of the joins
-    * (measured in GraphScaleSmoke / BASELINE.md r13). Nodes unseen by
+    * (measured at 65M edges, BASELINE.md round 13). Nodes unseen by
     * `ranks0` (the delta's new pages) start at uniform 1/N.
     *
     * Determinism contract: the handoff vector is the sig5-ROUNDED

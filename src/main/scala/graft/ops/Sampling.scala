@@ -65,7 +65,7 @@ object Sampling {
     * ≪ stratum size so the map-side combine collapses the histogram
     * (the 10⁶ default assumes corpus-scale strata of 10⁹⁺ rows; a
     * 10⁷-row corpus wants ~10⁴). Measured 90/10 skew vs the windowed
-    * form (SamplingScaleSmoke, BASELINE.md r9): 9.5 s vs 13.8 s at
+    * form (BASELINE.md round 9): 9.5 s vs 13.8 s at
     * 10M rows, 41 s vs 157 s at 100M — the windowed form's
     * single-task sort of the dominant stratum is the diverging
     * term. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.det.Sig
-import graft.functions.{MultiSketch, MultiSketchBuf}
+import graft.functions.{CoMoment, CoMomentBuf, MultiSketch, MultiSketchBuf}
 
 /** Incremental profile store — profile the daily crawl without ever
   * rescanning history.
@@ -102,85 +102,25 @@ object ProfileStore {
     val cols = df.columns.toSeq
     val numSet = Kinds.numericCols(df).toSet
     val dateSet = Kinds.dateCols(df).toSet
-    // identical projection to profileFused: hash/cast/null-guard in a
-    // codegen'd projection under the aggregate
-    val proj = df.select(cols.flatMap { c =>
-      val oc = Stats.orderable(df, c)
-      val value =
-        if (numSet(c)) col(c).cast("double")
-        else if (dateSet(c))
-          unix_micros(col(c).cast("timestamp")).cast("double")
-        else lit(null).cast("double")
-      val catItem =
-        if (numSet(c) || dateSet(c)) lit(null).cast("string")
-        else col(c).cast("string")
-      Seq(value.as(s"v__$c"),
-        when(oc.isNotNull, xxhash64(oc)).as(s"h__$c"),
-        catItem.as(s"i__$c"))
-    }: _*)
     val catSet = cols.filterNot(c => numSet(c) || dateSet(c)).toSet
     // SORTED numeric order: snapshot batches may present columns in
     // different schema orders, but the co-moment array layout must
     // agree across every snapshot of a store
-    val corrCols = cols.filter(numSet).sorted
-    val withCorr = corrCols.size >= 2
-    // rank co-moments ride the SAME aggregation pass: the frozen
-    // grid cuts are expression-local literals, so the rank transform
-    // is map-only (GridRank binary search) under the agg
-    val withSpear = withCorr && spearCuts.exists(m =>
-      corrCols.forall(m.contains))
-    val aggs = (count(lit(1)).as("__n") +: cols.map(c =>
-      MultiSketch.state(col(s"v__$c"), col(s"h__$c"), k, accuracy)
-        .as(s"st__$c"))) ++
-      catSet.toSeq.sorted.map(c =>
-        graft.functions.HeavyHitters.mg(col(s"i__$c"), MgK)
-          .as(s"mg__$c")) ++
-      (if (withCorr)
-        Seq(graft.functions.CoMoment.sketch(
-          array(corrCols.map(c => col(s"v__$c")): _*), corrCols.size)
-          .as("__cm"))
-      else Nil) ++
-      (if (withSpear)
-        Seq(graft.functions.CoMoment.sketch(
-          array(corrCols.map(c => graft.functions.GridRank.grid_rank(
-            col(s"v__$c"), spearCuts.get(c))): _*), corrCols.size)
-          .as("__sm"))
-      else Nil)
-    val row = proj.agg(aggs.head, aggs.tail: _*).first()
-    val nRows = row.getLong(0)
+    val scan = sketchScan(df, k, accuracy, cols.filter(numSet).sorted,
+      catSet.toSeq.sorted, spearCuts)
     val out = cols.map { c =>
       val kind =
         if (numSet(c)) "num" else if (dateSet(c)) "date" else "other"
-      val (mgN, mgItems): (Any, Any) =
-        if (catSet(c)) {
-          val s = row.getAs[Row](s"mg__$c")
+      val (mgN, mgItems): (Any, Any) = scan.mg.get(c) match {
+        case Some(s) =>
           (s.getAs[Long]("n"), s.getAs[Map[String, Long]]("items"))
-        } else (null, null)
-      Row(c, kind, nRows, row.getAs[Array[Byte]](s"st__$c"),
-        mgN, mgItems)
-    } ++ (if (withCorr) {
-      // reconstruct the buffer from the eval struct and persist the
-      // canonical wire bytes in the shared `state` column
-      val s = row.getAs[Row]("__cm")
-      val buf = new graft.functions.CoMomentBuf(corrCols.size)
-      buf.n = s.getAs[Long]("n")
-      val means = s.getAs[scala.collection.Seq[Double]]("means")
-      val cm = s.getAs[scala.collection.Seq[Double]]("cm")
-      means.zipWithIndex.foreach { case (v, i) => buf.mean(i) = v }
-      cm.zipWithIndex.foreach { case (v, i) => buf.c(i) = v }
-      Seq(Row(CorrRow, "corr", nRows,
-        graft.functions.CoMoment.serializeBuf(buf), null, null))
-    } else Nil) ++ (if (withSpear) {
-      val s = row.getAs[Row]("__sm")
-      val buf = new graft.functions.CoMomentBuf(corrCols.size)
-      buf.n = s.getAs[Long]("n")
-      val means = s.getAs[scala.collection.Seq[Double]]("means")
-      val cm = s.getAs[scala.collection.Seq[Double]]("cm")
-      means.zipWithIndex.foreach { case (v, i) => buf.mean(i) = v }
-      cm.zipWithIndex.foreach { case (v, i) => buf.c(i) = v }
-      Seq(Row(SpearRow, "spear", nRows,
-        graft.functions.CoMoment.serializeBuf(buf), null, null))
-    } else Nil)
+        case None => (null, null)
+      }
+      Row(c, kind, scan.n, scan.state(c), mgN, mgItems)
+    } ++ scan.cm.map(b => Row(CorrRow, "corr", scan.n,
+      CoMoment.serializeBuf(b), null, null)) ++
+      scan.rank.map(b => Row(SpearRow, "spear", scan.n,
+        CoMoment.serializeBuf(b), null, null))
     spark.createDataFrame(
       spark.sparkContext.parallelize(out, 1),
       StructType(Seq(
@@ -191,6 +131,77 @@ object ProfileStore {
         StructField("mg_n", LongType, nullable = true),
         StructField("mg_items",
           MapType(StringType, LongType), nullable = true))))
+  }
+
+  /** What one [[sketchScan]] captures: the row count; per column the
+    * serialized [[MultiSketchBuf]]; per requested column the
+    * Misra–Gries struct (n, items); the co-moment buffers of the
+    * values and of their grid ranks. */
+  private[profiler] final case class SketchScan(n: Long,
+      state: Map[String, Array[Byte]], mg: Map[String, Row],
+      cm: Option[CoMomentBuf], rank: Option[CoMomentBuf])
+
+  /** The capture scan shared by [[snapshotState]] and
+    * [[Profiler.profileFused]]: ONE aggregation over a projection
+    * that casts, hashes and null-guards every column (a codegen'd
+    * projection under the aggregate, so the aggregates read bare
+    * attributes). Captures each column's [[MultiSketch.state]]
+    * (KMV `k`, GK `accuracy`), a Misra–Gries summary of each
+    * `mgCols` column, and — over `corrCols` (≥ 2, in that order) —
+    * the all-pairs co-moments of the values and, when `rankCuts`
+    * covers them, of their grid ranks (a map-only GridRank binary
+    * search against expression-local literal cuts). */
+  private[profiler] def sketchScan(df: DataFrame, k: Int, accuracy: Int,
+      corrCols: Seq[String], mgCols: Seq[String] = Nil,
+      rankCuts: Option[Map[String, Array[Double]]] = None): SketchScan = {
+    val cols = df.columns.toSeq
+    val numSet = Kinds.numericCols(df).toSet
+    val dateSet = Kinds.dateCols(df).toSet
+    val mgSet = mgCols.toSet
+    val proj = df.select(cols.flatMap { c =>
+      val oc = Stats.orderable(df, c)
+      val value =
+        if (numSet(c)) col(c).cast("double")
+        else if (dateSet(c))
+          unix_micros(col(c).cast("timestamp")).cast("double")
+        else lit(null).cast("double")
+      Seq(value.as(s"v__$c"),
+        when(oc.isNotNull, xxhash64(oc)).as(s"h__$c")) ++
+        (if (mgSet(c)) Seq(col(c).cast("string").as(s"i__$c")) else Nil)
+    }: _*)
+    val withCorr = corrCols.size >= 2
+    val withRank = withCorr && rankCuts.exists(m =>
+      corrCols.forall(m.contains))
+    def coMoments(values: String => Column, name: String) =
+      CoMoment.sketch(array(corrCols.map(values): _*), corrCols.size)
+        .as(name)
+    val aggs = (count(lit(1)).as("__n") +: cols.map(c =>
+      MultiSketch.state(col(s"v__$c"), col(s"h__$c"), k, accuracy)
+        .as(s"st__$c"))) ++
+      mgCols.map(c =>
+        graft.functions.HeavyHitters.mg(col(s"i__$c"), MgK).as(s"mg__$c")) ++
+      (if (withCorr) Seq(coMoments(c => col(s"v__$c"), "__cm")) else Nil) ++
+      (if (withRank) Seq(coMoments(c => graft.functions.GridRank
+        .grid_rank(col(s"v__$c"), rankCuts.get(c)), "__sm")) else Nil)
+    val m = Stats.chunkedAgg(proj, aggs, chunk = 300)
+    def buf(name: String) =
+      m.get(name).map(r => coMomentBuf(r.asInstanceOf[Row], corrCols.size))
+    SketchScan(m("__n").asInstanceOf[Long],
+      cols.map(c => c -> m(s"st__$c").asInstanceOf[Array[Byte]]).toMap,
+      mgCols.map(c => c -> m(s"mg__$c").asInstanceOf[Row]).toMap,
+      buf("__cm"), buf("__sm"))
+  }
+
+  /** The [[CoMomentBuf]] behind a collected co-moment struct
+    * (n, means, cm) over `k` columns. */
+  private[profiler] def coMomentBuf(s: Row, k: Int): CoMomentBuf = {
+    val buf = new CoMomentBuf(k)
+    buf.n = s.getAs[Long]("n")
+    s.getAs[scala.collection.Seq[Double]]("means").zipWithIndex
+      .foreach { case (v, i) => buf.mean(i) = v }
+    s.getAs[scala.collection.Seq[Double]]("cm").zipWithIndex
+      .foreach { case (v, i) => buf.c(i) = v }
+    buf
   }
 
   /** The store's frozen Spearman rank grid, computed from a batch:
@@ -526,106 +537,53 @@ object ProfileStore {
     val numCols = spark.read.parquet(s"$path/state")
       .where(col("kind") === "num").select("col_name").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    val kk = numCols.size
-    val merged = rows.map(r => graft.functions.CoMoment
-        .deserializeBuf(r.getAs[Array[Byte]](0), kk))
+    val merged = rows.map(r => CoMoment
+        .deserializeBuf(r.getAs[Array[Byte]](0), numCols.size))
       .reduceLeft(_.mergeIn(_))
-    for {
-      i <- 0 until kk
-      j <- (i + 1) until kk
-      cii = merged.c(graft.functions.CoMoment.triIndex(i, i, kk))
-      cjj = merged.c(graft.functions.CoMoment.triIndex(j, j, kk))
-      if cii > 0.0 && cjj > 0.0
-    } yield (numCols(i), numCols(j), Sig.sig5(
-      merged.c(graft.functions.CoMoment.triIndex(i, j, kk)) /
-        (math.sqrt(cii) * math.sqrt(cjj))))
+    val rho = Profiler.corrFromCm(merged, numCols)
+    Stats.corrPairs(numCols).flatMap(p => rho(p).map(r => (p._1, p._2, r)))
   }
 
   /** The FULL profile report structure from persisted state only —
     * the 100 TB shape of `ProfileReport`: every overview stat,
     * column card, histogram, quantile row, and frequency table the
     * HTML report renders, assembled from the merged sketch state
-    * with no data rescan. Deliberate deltas from the scan-based
-    * profile: distinct is the KMV estimate, quantiles/histograms the
-    * merged-GK estimates, top values the MG summary (estimates are
-    * lower bounds with error ≤ n/(MgK+1)); the Pearson matrix comes
-    * from the persisted co-moment state (v3) over the SORTED numeric
-    * columns — note its listwise-deletion population is per-snapshot
-    * rows, matching the scan-based matrix exactly when batches share
-    * the null layout. */
+    * with no data rescan, by the same reader ([[Profiler.sketchStats]])
+    * and assembly ([[Profiler.assemble]]) as the one-scan
+    * [[Profiler.profileFused]] under `ProfilerConfig()` defaults.
+    * Deltas that remain from the fused profile: columns are in name
+    * order; top values are the Misra–Gries summary (estimates are
+    * lower bounds with error ≤ n/(MgK+1), exact while a column has at
+    * most MgK distinct values); the Pearson matrix (and so the CORR
+    * rejection, over the SORTED numeric columns) comes from the
+    * persisted co-moment state, whose listwise-deletion population is
+    * per-snapshot rows — equal to the scan's when batches share the
+    * null layout; Spearman ranks against the store's frozen grid;
+    * distinct and quantiles carry the store's own k and accuracy; no
+    * Cramér's V and no plan size. */
   def storeProfile(spark: SparkSession, path: String,
       snapshotIds: Option[Seq[String]] = None): TableProfile = {
-    val merged = mergedBuffers(spark, path, snapshotIds)
-    val nRows = merged.values.map(_._2).max
-    val columns = merged.toSeq.sortBy(_._1).map {
-      case (c, (kindRaw, _, b, mg)) =>
-        val base = kindRaw match {
-          case "num" => "NUM"
-          case "date" => "DATE"
-          case _ => "CAT"
-        }
-        val dis = b.distinctEstimate
-        val kind =
-          if (dis == 1) "CONST"
-          else if (dis == b.cnt && b.cnt > 1) "UNIQUE"
-          else base
-        val hasNum = b.n > 0
-        val stats: Map[String, Double] =
-          if (base == "NUM" && hasNum)
-            Map("mean" -> b.mean, "min" -> b.mn, "max" -> b.mx,
-              "sum" -> b.sum, "n_zeros" -> b.nz.toDouble) ++
-              Stats.momentsFromSums(b.n, b.m2, b.m3, b.m4)
-          else if (base == "DATE" && hasNum)
-            Map("dmn" -> b.mn, "dmx" -> b.mx)
-          else Map.empty
-        b.gkFlush()
-        val compressed = if (hasNum) Some(b.qs.compress()) else None
-        val quantiles: Map[String, Double] =
-          if (base == "NUM" && compressed.isDefined)
-            Seq("p05", "q1", "median", "q3", "p95").zip(
-              Stats.Ps.flatMap(p => compressed.get.query(p))).toMap
-          else Map.empty
-        val histogram: Seq[(Long, Long)] =
-          if (base == "NUM" && compressed.isDefined)
-            MultiSketch.gkHistogram(
-              MultiSketch.serializeGk(compressed.get), b.mn, b.mx, 10)
-          else Seq.empty
-        val topValues: Seq[(String, Long)] = mg match {
-          case Some(m) => m.counts.toSeq
-            .sortBy { case (v, cn) => (-cn, v) }.take(10)
-          case None => Seq.empty
-        }
-        ColumnProfile(
-          name = c, kind = kind, count = b.cnt,
-          missing = nRows - b.cnt,
-          pMissing =
-            if (nRows == 0) 0.0 else (nRows - b.cnt).toDouble / nRows,
-          distinct = dis,
-          pUnique = if (b.cnt == 0) 0.0 else dis.toDouble / b.cnt,
-          stats = stats, quantiles = quantiles,
-          histogram = histogram, topValues = topValues)
-    }
-    val totalMissing = columns.map(_.missing).sum
-    val warnings = columns.flatMap { cp =>
-      val w = scala.collection.mutable.ArrayBuffer.empty[String]
-      if (cp.pMissing > 0.5)
-        w += s"${cp.name}: ${(cp.pMissing * 100).round}% missing"
-      if (cp.kind == "CAT" && cp.distinct > 50)
-        w += s"${cp.name}: high cardinality (${cp.distinct})"
-      if (cp.kind == "CONST") w += s"${cp.name}: constant"
-      cp.stats.get("sk").foreach { sk =>
-        if (math.abs(sk) > 20) w += s"${cp.name}: highly skewed"
+    val cfg = ProfilerConfig()
+    val merged = mergedBuffers(spark, path, snapshotIds).toSeq.sortBy(_._1)
+    val sketched = merged.map { case (c, (kind, _, b, _)) =>
+      val base = kind match {
+        case "num" => "NUM"
+        case "date" => "DATE"
+        case _ => "CAT"
       }
-      w.toSeq
+      Profiler.sketchStats(c, base, b, cfg.bins)
     }
-    TableProfile(
-      n = nRows, nvar = columns.size, totalMissing = totalMissing,
-      pMissing =
-        if (nRows == 0 || columns.isEmpty) 0.0
-        else totalMissing.toDouble / (nRows.toDouble * columns.size),
-      columns = columns, rejected = Seq.empty, warnings = warnings,
-      correlations = mergedCorrelations(spark, path, snapshotIds),
-      spearman = mergedSpearmanApprox(spark, path, snapshotIds))
+    val topValues = merged.collect { case (c, (_, _, _, Some(mg))) =>
+      c -> mg.counts.toSeq.sortBy { case (v, cn) => (-cn, v) }
+        .take(cfg.topK)
+    }.toMap
+    Profiler.assemble(cfg, merged.map(_._2._2).max, sketched.map(_.stats),
+      sketched.map(s => s.stats.name -> s.histogram).toMap, topValues,
+      corrCols = merged.collect { case (c, ("num", _, _, _)) => c },
+      pearson = mergedCorrelations(spark, path, snapshotIds)
+        .map { case (a, b, r) => (a, b) -> Some(r) }.toMap,
+      spearman = mergedSpearmanApprox(spark, path, snapshotIds),
+      catAssoc = (Nil, 0, 0), sizeBytes = BigInt(0))
   }
 
   /** Standalone HTML report from the store (no data rescan). */

@@ -1,7 +1,12 @@
 package graft.profiler
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{CoMoment, CoMomentBuf, MultiSketch, MultiSketchBuf}
 
 /** Profiler configuration, mirroring the reference's knobs
   * (spark_df_profiling/__init__.py::ProfileReport ≈L12–30:
@@ -103,6 +108,23 @@ case class TableProfile(
       * positional constructions stay source-compatible. */
     spearman: Seq[(String, String, Double)] = Seq.empty)
 
+/** One column's statistics before assembly, whichever plan produced
+  * them: the exact passes of [[Profiler.profile]], or a
+  * [[graft.functions.MultiSketchBuf]] from one scan or a store merge
+  * ([[Profiler.sketchStats]]). `base` is the dtype bucket
+  * ([[Kinds.baseKind]]); `stats` holds mean/min/max/sum, the moments
+  * and n_zeros for NUM, dmn/dmx for DATE; `quantiles` the values at
+  * [[Stats.Ps]] (NUM only). */
+private[profiler] final case class ColumnStats(name: String, base: String,
+    count: Long, distinct: Long, stats: Map[String, Double],
+    quantiles: Seq[Double])
+
+/** A column's statistics read off its sketch buffer, with the
+  * equal-width histogram estimated from its GK summary and that
+  * summary's bytes (None without a numeric value). */
+private[profiler] final case class Sketched(stats: ColumnStats,
+    histogram: Seq[(Long, Long)], gk: Option[Array[Byte]])
+
 /** The public profiling API (reference: `ProfileReport(df, …)`).
   *
   * Architecture delta vs the reference (SURVEY.md §4.3): instead of an
@@ -127,12 +149,12 @@ case class TableProfile(
   * grouped aggregation — groupBy(col_idx) + countDistinct over typed
   * slots; groupBy(col_idx) + exact/approx percentiles, final merges
   * parallel across columns; groupBy(col_idx, bin); groupBy(col_idx,
-  * value) + row_number ≤ topK with `__other__` = pass A's non-null
-  * count − Σ top-k. Spark's JVM-wide codegen cache holds 100 classes,
-  * so a pass's plan shape must not depend on the schema: the long
-  * form compiles the same operators for 11 or 500 columns, where one
-  * job per column or k·bins conditional sums compiled more classes
-  * than the cache holds and recompiled them on every warm profile.
+  * value) + row_number ≤ topK. Spark's JVM-wide codegen cache holds
+  * 100 classes, so a pass's plan shape must not depend on the schema:
+  * the long form compiles the same operators for 11 or 500 columns,
+  * where one job per column or k·bins conditional sums compiled more
+  * classes than the cache holds and recompiled them on every warm
+  * profile.
   *
   * The wide single-row aggregations (A, A2) run through bounded-size
   * chunks (several scans instead of one enormous plan past a few
@@ -140,15 +162,13 @@ case class TableProfile(
   * O(k) — never proportional to row count — so the same plans hold at
   * 100 TB with `exactQuantiles=false, exactDistinct=false`
   * (sketch-based paths).
+  *
+  * Every profile — exact, fused ([[profileFused]]) and the store's
+  * ([[ProfileStore.storeProfile]]) — ends in ONE pure assembly,
+  * [[assemble]], which owns the kind rule, the `__other__` row, CORR
+  * rejection, the warnings and the table totals.
   */
 object Profiler {
-
-  /** Wide single-row aggregations run through [[Stats.chunkedAgg]] —
-    * a 500-column profile would otherwise build multi-thousand-
-    * expression Aggregate plans (Catalyst analysis and codegen are
-    * superlinear in expression count). */
-  private def chunkedAgg(df: DataFrame, aggs: Seq[org.apache.spark.sql.Column],
-      chunk: Int): Map[String, Any] = Stats.chunkedAgg(df, aggs, chunk)
 
   /** Tag the jobs a concurrent pass submits from its POOL thread
     * (r17, VERDICT item 5): a per-pass scheduler pool so overlapped
@@ -165,12 +185,31 @@ object Profiler {
     sc.setJobDescription(s"profile: $pass")
   }
 
+  /** r16: independent passes are submitted from a small thread pool
+    * so their jobs overlap (guide §2.6: actions are only sequential
+    * because the calling code submits them in sequence). Each pass's PLAN is
+    * byte-identical to the sequential form — only submission order
+    * changes, so every collected value is unchanged. */
+  private def withPool[T](threads: Int)(body: ExecutionContext => T): T = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try body(ExecutionContext.fromExecutorService(pool))
+    finally pool.shutdown()
+  }
+
+  private def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+
+  /** Names of the [[Stats.Ps]] quantiles in a [[ColumnProfile]]. */
+  private val QuantileNames = Seq("p05", "q1", "median", "q3", "p95")
+
+  /** KMV size and GK accuracy of the one-scan profile. */
+  private val FusedK = 1024
+  private val FusedAccuracy = 10000
+
   def profile(df: DataFrame,
       cfg: ProfilerConfig = ProfilerConfig()): TableProfile = {
     val allCols = df.columns.toSeq
     val numCols = Kinds.numericCols(df)
     val dateColsS = Kinds.dateCols(df)
-    val nvar = allCols.size
 
     // ---- pass A: counts + moments + zeros + date ranges ------------
     // Exact countDistinct is kept OUT of this agg: k distinct
@@ -201,23 +240,15 @@ object Profiler {
         Seq(unix_micros(min(col(c)).cast("timestamp")).as(s"dmn__$c"),
           unix_micros(max(col(c)).cast("timestamp")).as(s"dmx__$c"))
       }
-    // r16: passes A (base), A-distinct and B are INDEPENDENT plans —
-    // submit them from a small thread pool so their jobs overlap
-    // (guide §2.6: actions are only sequential because driver code
-    // calls them sequentially). A2 depends on A's means, so it runs
-    // as soon as A lands, concurrently with the still-running
-    // distinct/B jobs. Each pass's PLAN is byte-identical to the
-    // sequential form — only submission order changes, so every
-    // collected value is unchanged.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    val (aMap, momentMap, qMap, spearmanCuts, withSpearmanGrid) = try {
+    // r16: passes A (base), A-distinct and B are INDEPENDENT plans and
+    // overlap; A2 depends on A's means, so it runs as soon as A lands,
+    // concurrently with the still-running distinct/B jobs.
+    val wsg = cfg.spearman && !cfg.exactSpearman && numCols.size >= 2
+    val (aMap, momentMap, qMap, spearmanCuts) = withPool(3) {
+        implicit ec =>
       val fBase = Future {
         tagPass(df, "passA-base")
-        chunkedAgg(df, aggsA, chunk = 600)
+        Stats.chunkedAgg(df, aggsA, chunk = 600)
       }
       // exact distincts in their own pass: one grouped single-
       // distinct aggregation over the long form
@@ -236,7 +267,6 @@ object Profiler {
       // percentile_approx — cheap next to the exact percentile
       // buffers), so pass D2 only pays its rank/co-moment pass
       // instead of a dedicated grid aggregation.
-      val wsg = cfg.spearman && !cfg.exactSpearman && numCols.size >= 2
       val fB: Future[(Map[String, Seq[Double]],
           Map[String, Array[Double]])] =
         if (numCols.isEmpty) Future.successful((Map.empty, Map.empty))
@@ -251,7 +281,7 @@ object Profiler {
             (0 to cfg.spearmanGrid).map(_.toDouble / cfg.spearmanGrid))
           quantilesLong(df, numCols, useApprox, gridPs)
         }
-      val base = Await.result(fBase, Duration.Inf)
+      val base = await(fBase)
       def bLong(name: String): Long = base(name).asInstanceOf[Long]
       def bDouble(name: String): Option[Double] =
         Option(base(name)).map {
@@ -268,7 +298,7 @@ object Profiler {
             numCols.flatMap(c => bDouble(s"mean__$c").map(c -> _))
           if (withMu.isEmpty) Map.empty
           else {
-            val r2 = chunkedAgg(df, Stats.centralSumAggs(withMu),
+            val r2 = Stats.chunkedAgg(df, Stats.centralSumAggs(withMu),
               chunk = 600)
             withMu.map { case (c, _) =>
               c -> Stats.momentsFromSums(bLong(s"cnt__$c"),
@@ -278,13 +308,51 @@ object Profiler {
             }.toMap
           }
         }
-      val (q, cuts) = Await.result(fB, Duration.Inf)
-      (base ++ Await.result(fDis, Duration.Inf), mm, q, cuts, wsg)
-    } finally pool.shutdown()
+      val (q, cuts) = await(fB)
+      (base ++ await(fDis), mm, q, cuts)
+    }
 
-    assemble(df, cfg, aMap, momentMap, qMap,
-      spearmanCutsOverride =
-        if (withSpearmanGrid) Some(spearmanCuts) else None)
+    def aLong(name: String): Long = aMap(name).asInstanceOf[Long]
+    def aDouble(name: String): Option[Double] =
+      Option(aMap(name)).map {
+        case x: Double => x
+        case x: Long => x.toDouble
+        case x: Number => x.doubleValue()
+      }
+    val columns = df.schema.fields.toSeq.map { f =>
+      val c = f.name
+      val base = Kinds.baseKind(f.dataType)
+      val stats: Map[String, Double] =
+        if (base == "NUM")
+          Seq("mean", "min", "max", "sum")
+            .flatMap(k => aDouble(s"${k}__$c").map(k -> _)).toMap ++
+            momentMap.getOrElse(c, Map.empty) ++
+            Map("n_zeros" -> aLong(s"z__$c").toDouble)
+        else if (base == "DATE")
+          Seq("dmn", "dmx").flatMap(k =>
+            Option(aMap(s"${k}__$c"))
+              .map(v => k -> v.asInstanceOf[Long].toDouble)).toMap
+        else Map.empty
+      ColumnStats(c, base, aLong(s"cnt__$c"), aLong(s"dis__$c"), stats,
+        qMap.getOrElse(c, Seq.empty))
+    }
+
+    // r16: histograms, frequency tables, the Pearson co-moment scan,
+    // categorical associations and the Spearman pass are MUTUALLY
+    // INDEPENDENT plans (hist needs only pass A's bounds) — they
+    // overlap.
+    val hCols = columns.filter(_.base == "NUM") ++
+      columns.filter(_.base == "DATE")
+    withPool(5) { implicit ec =>
+      val fHist = Future { histogramPass(df, cfg.bins, hCols) }
+      val fFreq = Future { freqPass(df, cfg.topK) }
+      val fCorr = Future { pearsonPass(df, cfg, numCols) }
+      val fCatAssoc = Future { catAssocPass(df, cfg, columns) }
+      val fSpearman = Future { spearmanPass(df, cfg, numCols, spearmanCuts) }
+      assemble(cfg, aLong("__n"), columns, await(fHist), await(fFreq),
+        numCols, await(fCorr), await(fSpearman), await(fCatAssoc),
+        sizeBytes(df))
+    }
   }
 
   /** Pass B: the [[Stats.quantilesFrame]] rows collected per column
@@ -310,12 +378,17 @@ object Profiler {
   }
 
   /** Whole-table profile in ONE input scan for all scannable
-    * statistics: each column gets a [[graft.functions.MultiSketchAgg]]
-    * carrying count + streaming central moments + min/max/sum/zeros +
-    * a KMV distinct sketch + GK quantile summaries, so passes A, A2
-    * and B of [[profile]] collapse into a single aggregation. The
-    * remaining jobs (histograms — which need the min/max bounds this
-    * scan produces — frequency tables, correlations) are unchanged.
+    * statistics: the profile store's capture aggregation
+    * ([[ProfileStore.sketchScan]]) gives each column a
+    * [[graft.functions.MultiSketchBuf]] — count + streaming central
+    * moments + min/max/sum/zeros + a KMV distinct sketch + GK quantile
+    * summaries — plus one all-pairs co-moment buffer, so passes A, A2,
+    * B, C-histograms and D of [[profile]] collapse into a single
+    * aggregation. Each buffer is finalized by [[sketchStats]], the
+    * reader the store applies to its merged buffers, with histograms
+    * and the Spearman grid cuts estimated from the GK summaries. The
+    * frequency tables (and the opt-in passes) still run as their own
+    * jobs.
     *
     * Statistics are sketch-grade where [[profile]]'s sketch config is
     * sketch-grade (distinct ~1/√k error above k=1024, quantiles at GK
@@ -327,138 +400,87 @@ object Profiler {
     * set it false for the strict single-scan form.) */
   def profileFused(df: DataFrame,
       cfg: ProfilerConfig = ProfilerConfig()): TableProfile = {
-    import graft.functions.MultiSketch
-    val allCols = df.columns.toSeq
-    val numColsSet = Kinds.numericCols(df).toSet
-    val dateColsSet = Kinds.dateCols(df).toSet
-    // hash/cast/null-guard work runs in a codegen'd projection UNDER
-    // the aggregate (fused into the scan stage by whole-stage
-    // codegen); the aggregate's children are then bare attribute
-    // reads, so its per-row interpreted eval is just row access
-    val proj = df.select(allCols.flatMap { c =>
-      val oc = Stats.orderable(df, c)
-      val value =
-        if (numColsSet(c)) col(c).cast("double")
-        else if (dateColsSet(c))
-          unix_micros(col(c).cast("timestamp")).cast("double")
-        else lit(null).cast("double")
-      Seq(value.as(s"v__$c"),
-        when(oc.isNotNull, xxhash64(oc)).as(s"h__$c"))
-    }: _*)
-    // numeric column order for the co-moment matrix
-    val numColsOrdered = Kinds.numericCols(df)
-    val withCorr = cfg.correlations && numColsOrdered.size >= 2
-    val aggs = (count(lit(1)).as("__n") +: allCols.map { c =>
-      // quantile summaries where the profile reads them: numeric
-      // quantiles, and DATE columns for the GK-estimated epoch-micros
-      // mini-histogram (the pandas-profiling 1.x date render)
-      MultiSketch.sketch(col(s"v__$c"), col(s"h__$c"),
-        ps = if (numColsSet(c) || dateColsSet(c)) Stats.Ps else Nil)
-        .as(s"ms__$c")
-    }) ++
-      // the whole correlation matrix rides in the same scan: one
-      // buffer of all k(k+1)/2 streaming co-moments (see CoMomentAgg)
-      (if (withCorr)
-        Seq(graft.functions.CoMoment.sketch(
-          array(numColsOrdered.map(c => col(s"v__$c")): _*),
-          numColsOrdered.size).as("__cm"))
-      else Nil)
-    val m = chunkedAgg(proj, aggs, chunk = 300)
-    def rowOf(c: String) = m(s"ms__$c").asInstanceOf[org.apache.spark.sql.Row]
-    val aMap: Map[String, Any] = Map("__n" -> m("__n")) ++
-      allCols.flatMap { c =>
-        val r = rowOf(c)
-        val base = Seq[(String, Any)](s"cnt__$c" -> r.getAs[Long]("cnt"),
-          s"dis__$c" -> r.getAs[Long]("dis"))
-        val extra: Seq[(String, Any)] =
-          if (numColsSet(c))
-            Seq(s"mean__$c" -> r.getAs[Any]("mean"),
-              s"min__$c" -> r.getAs[Any]("mn"),
-              s"max__$c" -> r.getAs[Any]("mx"),
-              s"sum__$c" -> r.getAs[Any]("sm"),
-              s"z__$c" -> r.getAs[Long]("nz"))
-          else if (dateColsSet(c))
-            Seq(s"dmn__$c" -> Option(r.getAs[Any]("mn"))
-                .map(v => java.lang.Long.valueOf(
-                  v.asInstanceOf[Double].toLong)).orNull,
-              s"dmx__$c" -> Option(r.getAs[Any]("mx"))
-                .map(v => java.lang.Long.valueOf(
-                  v.asInstanceOf[Double].toLong)).orNull)
-          else Nil
-        base ++ extra
-      }
-    val momentMap: Map[String, Map[String, Double]] =
-      allCols.filter(numColsSet).flatMap { c =>
-        val r = rowOf(c)
-        val nNum = r.getAs[Long]("n_num")
-        if (nNum == 0 || r.isNullAt(r.fieldIndex("m2"))) None
-        else Some(c -> Stats.momentsFromSums(nNum,
-          r.getAs[Double]("m2"), r.getAs[Double]("m3"),
-          r.getAs[Double]("m4")))
-      }.toMap
-    val qMap: Map[String, Seq[Double]] =
-      allCols.filter(numColsSet).map { c =>
-        val r = rowOf(c)
-        val qs = r.getAs[scala.collection.Seq[Any]]("qs")
-        c -> (if (qs == null) Seq.empty[Double]
-              else qs.map(x => Option(x).map(_.asInstanceOf[Double])
-                .getOrElse(Double.NaN)).toSeq)
-      }.toMap
-    // histograms estimated from the GK summaries — no extra scan;
-    // per-bin error bounded by the GK rank guarantee (≤ ε·n per edge,
-    // ε = 1e-4), exact whenever a column's summary never compressed
-    val histOverride: Map[String, Seq[(Long, Long)]] =
-      allCols.filter(c => numColsSet(c) || dateColsSet(c)).flatMap { c =>
-        val r = rowOf(c)
-        val gk = r.getAs[Array[Byte]]("gk")
-        if (gk == null) None
-        else {
-          val mn = Option(r.getAs[Any]("mn"))
-            .map(_.asInstanceOf[Double]).getOrElse(Double.NaN)
-          val mx = Option(r.getAs[Any]("mx"))
-            .map(_.asInstanceOf[Double]).getOrElse(Double.NaN)
-          val h = MultiSketch.gkHistogram(gk, mn, mx, cfg.bins)
-          if (h.isEmpty) None else Some(c -> h)
-        }
-      }.toMap
-    // correlation matrix from the fused co-moment buffer, sig5-rounded
-    // exactly as Stats.corrMatrix rounds in-plan
-    val corrOverride: Option[Map[(String, String), Option[Double]]] =
-      if (!withCorr) Some(Map.empty)
-      else Some(corrFromCmRow(
-        m("__cm").asInstanceOf[org.apache.spark.sql.Row], numColsOrdered))
-    // Spearman grid cuts queried straight from the fused GK summaries
-    // — no extra scan for the grid; pass D2 then costs exactly one
+    val numCols = Kinds.numericCols(df)
+    val withCorr = cfg.correlations && numCols.size >= 2
+    val scan = ProfileStore.sketchScan(df, FusedK, FusedAccuracy,
+      corrCols = if (withCorr) numCols else Nil)
+    val sketched = df.schema.fields.toSeq.map { f =>
+      sketchStats(f.name, Kinds.baseKind(f.dataType),
+        MultiSketch.deserializeBuf(scan.state(f.name), FusedK,
+          FusedAccuracy), cfg.bins)
+    }
+    // Spearman grid cuts queried straight from the GK summaries — no
+    // extra scan for the grid; pass D2 then costs exactly one
     // rank/co-moment pass on top of the single profile scan.
-    val spearmanCutsF: Option[Map[String, Array[Double]]] =
-      if (!cfg.spearman || cfg.exactSpearman ||
-          numColsOrdered.size < 2) None
+    val cuts: Map[String, Array[Double]] =
+      if (!cfg.spearman || cfg.exactSpearman || numCols.size < 2)
+        Map.empty
       else {
-        val ps = (0 to cfg.spearmanGrid)
-          .map(_.toDouble / cfg.spearmanGrid)
-        Some(numColsOrdered.flatMap { c =>
-          val gk = rowOf(c).getAs[Array[Byte]]("gk")
-          if (gk == null) None
-          else Some(c -> MultiSketch.gkQuantiles(gk, ps))
-        }.toMap)
+        val ps = (0 to cfg.spearmanGrid).map(_.toDouble / cfg.spearmanGrid)
+        sketched.filter(_.stats.base == "NUM").flatMap(s =>
+          s.gk.map(g => s.stats.name -> MultiSketch.gkQuantiles(g, ps)))
+          .toMap
       }
-    assemble(df, cfg, aMap, momentMap, qMap,
-      histOverride = Some(histOverride), corrOverride = corrOverride,
-      spearmanCutsOverride = spearmanCutsF)
+    val columns = sketched.map(_.stats)
+    withPool(3) { implicit ec =>
+      val fFreq = Future { freqPass(df, cfg.topK) }
+      val fCatAssoc = Future { catAssocPass(df, cfg, columns) }
+      val fSpearman = Future { spearmanPass(df, cfg, numCols, cuts) }
+      assemble(cfg, scan.n, columns,
+        sketched.map(s => s.stats.name -> s.histogram).toMap,
+        await(fFreq), numCols,
+        scan.cm.fold(Map.empty[(String, String), Option[Double]])(
+          corrFromCm(_, numCols)),
+        await(fSpearman), await(fCatAssoc), sizeBytes(df))
+    }
   }
 
-  /** ρ matrix from a collected [[graft.functions.CoMomentAgg]] struct,
-    * sig5-rounded exactly as Stats.corrMatrix rounds in-plan. */
-  private def corrFromCmRow(r: org.apache.spark.sql.Row,
-      cols: Seq[String]): Map[(String, String), Option[Double]] = {
-    val cm = r.getAs[scala.collection.Seq[Double]]("cm").toArray
+  /** A column's statistics from its (merged) sketch buffer — the one
+    * reader of [[graft.functions.MultiSketchBuf]] state, shared by
+    * [[profileFused]] and [[ProfileStore.storeProfile]]. Histograms
+    * are estimated from the GK summary: per-bin error bounded by the
+    * GK rank guarantee (≤ ε·n per edge), exact whenever the summary
+    * never compressed. */
+  private[profiler] def sketchStats(name: String, base: String,
+      b: MultiSketchBuf, bins: Int): Sketched = {
+    val hasNum = b.n > 0
+    val compressed = Option.when(hasNum) { b.gkFlush(); b.qs.compress() }
+    val stats: Map[String, Double] =
+      if (base == "NUM")
+        (if (hasNum) Map("mean" -> b.mean, "min" -> b.mn, "max" -> b.mx,
+           "sum" -> b.sum) ++ Stats.momentsFromSums(b.n, b.m2, b.m3, b.m4)
+         else Map.empty[String, Double]) ++
+          Map("n_zeros" -> b.nz.toDouble)
+      else if (base == "DATE" && hasNum)
+        Map("dmn" -> b.mn.toLong.toDouble, "dmx" -> b.mx.toLong.toDouble)
+      else Map.empty
+    val quantiles = compressed match {
+      case Some(q) if base == "NUM" =>
+        Stats.Ps.map(p => q.query(p).getOrElse(Double.NaN))
+      case _ => Seq.empty
+    }
+    val gk = compressed.map(MultiSketch.serializeGk)
+    val histogram = gk match {
+      case Some(g) if base != "CAT" =>
+        MultiSketch.gkHistogram(g, b.mn, b.mx, bins)
+      case _ => Seq.empty
+    }
+    Sketched(ColumnStats(name, base, b.cnt, b.distinctEstimate, stats,
+      quantiles), histogram, gk)
+  }
+
+  /** ρ matrix of `cols` from an all-pairs co-moment buffer, sig5-
+    * rounded exactly as Stats.corrMatrix rounds in-plan; None for a
+    * pair with a zero-variance side. */
+  private[profiler] def corrFromCm(buf: CoMomentBuf, cols: Seq[String])
+      : Map[(String, String), Option[Double]] = {
     val kN = cols.size
     val idx = cols.zipWithIndex.toMap
     Stats.corrPairs(cols).map { case (a, b) =>
       val i = idx(a); val j = idx(b)
-      val cij = cm(graft.functions.CoMoment.triIndex(i, j, kN))
-      val cii = cm(graft.functions.CoMoment.triIndex(i, i, kN))
-      val cjj = cm(graft.functions.CoMoment.triIndex(j, j, kN))
+      val cij = buf.c(CoMoment.triIndex(i, j, kN))
+      val cii = buf.c(CoMoment.triIndex(i, i, kN))
+      val cjj = buf.c(CoMoment.triIndex(j, j, kN))
       val denom = math.sqrt(cii) * math.sqrt(cjj)
       (a, b) -> (if (denom == 0.0 || denom.isNaN) None
                  else Some(graft.det.Sig.sig5(cij / denom)))
@@ -474,228 +496,170 @@ object Profiler {
   private def coMomentCorr(df: DataFrame, cols: Seq[String])
       : Map[(String, String), Option[Double]] = {
     val vals = array(cols.map(c => col(c).cast("double")): _*)
-    val r = df.agg(graft.functions.CoMoment.sketch(vals, cols.size)
-      .as("__cm")).first().getAs[org.apache.spark.sql.Row]("__cm")
-    corrFromCmRow(r, cols)
+    val r = df.agg(CoMoment.sketch(vals, cols.size).as("__cm")).first()
+    corrFromCm(ProfileStore.coMomentBuf(r.getStruct(0), cols.size), cols)
   }
 
-  /** Passes C (histograms + frequency tables) and D (correlations)
-    * plus final assembly — shared by the pass-based [[profile]] and
-    * the single-scan [[profileFused]], which produce the same
-    * (aMap, momentMap, qMap) shape by different plans. */
-  private def assemble(df: DataFrame, cfg: ProfilerConfig,
-      aMap: Map[String, Any],
-      momentMap: Map[String, Map[String, Double]],
-      qMap: Map[String, Seq[Double]],
-      histOverride: Option[Map[String, Seq[(Long, Long)]]] = None,
-      corrOverride: Option[Map[(String, String), Option[Double]]] = None,
-      spearmanCutsOverride: Option[Map[String, Array[Double]]] = None)
-      : TableProfile = {
-    val allCols = df.columns.toSeq
-    val numCols = Kinds.numericCols(df)
-    val nvar = allCols.size
-    def aLong(name: String): Long = aMap(name).asInstanceOf[Long]
-    def aDouble(name: String): Option[Double] =
-      Option(aMap(name)).map {
-        case x: Double => x
-        case x: Long => x.toDouble
-        case x: Number => x.doubleValue()
+  /** Pass C histograms: one groupBy(col_idx, bin) over the long form
+    * for the NUM and DATE columns (DATE as exact epoch-micros doubles,
+    * < 2^53 — the date_histogram determinism argument), bounds from
+    * the columns' min/max; the grid fills the empty buckets after the
+    * collect. */
+  private def histogramPass(df: DataFrame, bins: Int,
+      cols: Seq[ColumnStats]): Map[String, Seq[(Long, Long)]] = {
+    if (cols.isEmpty) return Map.empty
+    tagPass(df, "passC-histograms")
+    val hCols = cols.map(_.name)
+    def bound(num: String, date: String) = cols.map(cs =>
+      cs.name -> cs.stats.getOrElse(if (cs.base == "NUM") num else date,
+        Double.NaN)).toMap
+    val mnMap = bound("min", "dmn")
+    val mxMap = bound("max", "dmx")
+    val dateCols = cols.filter(_.base == "DATE").map(_.name)
+    val src =
+      if (dateCols.isEmpty) df
+      else df.select(cols.map { cs =>
+        if (cs.base == "NUM") col(cs.name)
+        else unix_micros(col(cs.name).cast("timestamp")).cast("double")
+          .as(cs.name)
+      }: _*)
+    val cells = Stats.histogramCounts(src, hCols, bins, mnMap, mxMap)
+      .collect()
+      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    Stats.histogramBins(hCols, bins, mnMap, mxMap)
+      .flatMap { case (i, c, b, _, _, keepEmpty) =>
+        val cnt = cells.getOrElse((i, b), 0L)
+        if (cnt > 0 || keepEmpty) Some(c -> ((b, cnt))) else None
       }
-    val n = aLong("__n")
+      .groupBy(_._1).map { case (c, bs) => c -> bs.map(_._2) }
+  }
 
-    // ---- pass C: histograms + frequency tables (one job each) ----
-    // DATE columns join the numeric histogram job as exact
-    // epoch-micros doubles (< 2^53, conversion exact — the
-    // date_histogram determinism argument): same scan count, the
-    // pandas-profiling 1.x date mini-histogram included.
-    val dateColsA = Kinds.dateCols(df)
-    def aEpoch(name: String): Double = Option(aMap(name))
-      .map(_.asInstanceOf[Long].toDouble).getOrElse(Double.NaN)
-    val mnMap = numCols.map(c =>
-      c -> aDouble(s"min__$c").getOrElse(Double.NaN)).toMap ++
-      dateColsA.map(c => c -> aEpoch(s"dmn__$c"))
-    val mxMap = numCols.map(c =>
-      c -> aDouble(s"max__$c").getOrElse(Double.NaN)).toMap ++
-      dateColsA.map(c => c -> aEpoch(s"dmx__$c"))
-    val histSrc =
-      if (dateColsA.isEmpty) df
-      else df.select(numCols.map(col) ++ dateColsA.map(c =>
-        unix_micros(col(c).cast("timestamp")).cast("double").as(c)): _*)
-    // r16: histograms, frequency tables, the Pearson co-moment scan,
-    // categorical associations and the Spearman pass are MUTUALLY
-    // INDEPENDENT plans (hist needs only pass A's bounds, already in
-    // aMap) — submit them from a small pool so their jobs overlap
-    // (guide §2.6); each individual plan is unchanged, so every
-    // collected value is identical to the sequential form.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    val (histRows, freqRows, corrM, catAssoc0, spearmanM) = try {
-    val hCols = numCols ++ dateColsA
-    val fHist: Future[Map[String, Seq[(Long, Long)]]] =
-      if (hCols.isEmpty) Future.successful(Map.empty)
-      else histOverride.map(Future.successful).getOrElse(Future {
-        tagPass(df, "passC-histograms")
-        // one groupBy(col_idx, bin) over the long form for all
-        // columns; the grid fills the empty buckets driver-side
-        val cells = Stats.histogramCounts(histSrc, hCols, cfg.bins,
-          mnMap, mxMap).collect()
-          .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-        Stats.histogramBins(hCols, cfg.bins, mnMap, mxMap)
-          .flatMap { case (i, c, b, _, _, keepEmpty) =>
-            val cnt = cells.getOrElse((i, b), 0L)
-            if (cnt > 0 || keepEmpty) Some(c -> ((b, cnt))) else None
-          }
-          .groupBy(_._1).map { case (c, bs) => c -> bs.map(_._2) }
-      })
-    val catColsS = Kinds.catCols(df)
-    val fFreq: Future[Map[String, Seq[(String, Long)]]] =
-      if (catColsS.isEmpty) Future.successful(Map.empty)
-      else Future {
-        tagPass(df, "passC-freq")
-        // top-k per column over the long form; the `__other__`
-        // remainder is pass A's non-null count minus Σ top-k
-        val top = Stats.topValues(Stats.freqCounts(df, catColsS), cfg.topK)
-          .collect().groupBy(_.getAs[Int]("col_idx"))
-        catColsS.zipWithIndex.flatMap { case (c, i) =>
-          top.get(i).map { rs =>
-            val vals = rs.sortBy(_.getAs[Long]("rnk")).toSeq
-              .map(r => (r.getAs[String]("value"), r.getAs[Long]("cnt")))
-            val other = aLong(s"cnt__$c") - vals.map(_._2).sum
-            c -> (if (other > 0) vals :+ (("__other__", other)) else vals)
-          }
-        }.toMap
+  /** Pass C frequency tables: top-K per CAT column over the long form
+    * (the `__other__` remainder is the assembly's). */
+  private def freqPass(df: DataFrame, topK: Int)
+      : Map[String, Seq[(String, Long)]] = {
+    val catCols = Kinds.catCols(df)
+    if (catCols.isEmpty) return Map.empty
+    tagPass(df, "passC-freq")
+    val top = Stats.topValues(Stats.freqCounts(df, catCols), topK)
+      .collect().groupBy(_.getAs[Int]("col_idx"))
+    catCols.zipWithIndex.flatMap { case (c, i) =>
+      top.get(i).map { rs =>
+        c -> rs.sortBy(_.getAs[Long]("rnk")).toSeq
+          .map(r => (r.getAs[String]("value"), r.getAs[Long]("cnt")))
       }
-    // ---- pass D: correlations + rejection — one co-moment scan
-    // (the oracle-parity two-pass plan lives on in Stats.corrMatrix,
-    // which the corr_matrix query declares directly) ----
-    val fCorr: Future[Map[(String, String), Option[Double]]] =
-      if (!cfg.correlations || numCols.size < 2)
-        Future.successful(Map.empty)
-      else corrOverride.map(Future.successful)
-        .getOrElse(Future {
-          tagPass(df, "passD-pearson"); coMomentCorr(df, numCols)
-        })
-    // ---- pass E (opt-in) + pass D2 (Spearman), moved ahead of the
-    // driver-side assembly so their scans overlap the other passes —
-    // bodies unchanged (see the pass D2 scaladoc below) ----
-    val fCatAssoc: Future[(Seq[(String, String, Double)], Int, Int)] =
-      Future {
-        tagPass(df, "passE-catassoc")
-        // the same CAT-candidate set the column assembly derives:
-        // base kind CAT, 1 < distinct ≤ 100, not UNIQUE (a CAT column
-        // is never CORR-rejected — rejection runs over numCols only)
-        val typeOf = df.schema.fields.map(f => f.name -> f.dataType).toMap
-        val catCand = allCols.filter { c =>
-          Kinds.baseKind(typeOf(c)) == "CAT" && {
-            val dis = aLong(s"dis__$c"); val cnt = aLong(s"cnt__$c")
-            dis > 1 && dis <= 100 && !(dis == cnt && cnt > 1)
-          }
+    }.toMap
+  }
+
+  /** Pass D: the Pearson matrix in one co-moment scan (the
+    * oracle-parity two-pass plan lives on in Stats.corrMatrix, which
+    * the corr_matrix query declares directly). */
+  private def pearsonPass(df: DataFrame, cfg: ProfilerConfig,
+      numCols: Seq[String]): Map[(String, String), Option[Double]] =
+    if (!cfg.correlations || numCols.size < 2) Map.empty
+    else { tagPass(df, "passD-pearson"); coMomentCorr(df, numCols) }
+
+  /** Pass E (opt-in): pairwise Cramér's V over the columns the
+    * assembly keeps as CAT with 1 < distinct ≤ 100 (a CAT column is
+    * never CORR-rejected — rejection runs over the numeric columns
+    * only). Returns (associations, candidate pairs, pairs kept). */
+  private def catAssocPass(df: DataFrame, cfg: ProfilerConfig,
+      cols: Seq[ColumnStats]): (Seq[(String, String, Double)], Int, Int) = {
+    tagPass(df, "passE-catassoc")
+    val catCand = cols.filter(cs =>
+      Kinds.kind(cs.base, cs.count, cs.distinct) == "CAT" &&
+        cs.distinct > 1 && cs.distinct <= 100).map(_.name)
+    val catPairsAll =
+      for { i <- catCand.indices; j <- (i + 1) until catCand.size }
+        yield (catCand(i), catCand(j))
+    val catPairs = catPairsAll.take(cfg.maxCatAssocPairs)
+    val assoc =
+      if (!cfg.catAssociations || catPairs.isEmpty) Seq.empty
+      else graft.ops.CatStats.associationAll(df, catPairs)
+        .collect().toSeq.flatMap { r =>
+          if (r.isNullAt(5)) None
+          else Some((r.getString(0), r.getString(1), r.getDouble(5)))
         }
-        val catPairsAll =
-          for { i <- catCand.indices; j <- (i + 1) until catCand.size }
-            yield (catCand(i), catCand(j))
-        val catPairs = catPairsAll.take(cfg.maxCatAssocPairs)
-        val assoc =
-          if (!cfg.catAssociations || catPairs.isEmpty) Seq.empty
-          else graft.ops.CatStats.associationAll(df, catPairs)
-            .collect().toSeq.flatMap { r =>
-              if (r.isNullAt(5)) None
-              else
-                Some((r.getString(0), r.getString(1), r.getDouble(5)))
-            }
-        (assoc, catPairsAll.size, catPairs.size)
-      }
-    val fSpearman: Future[Seq[(String, String, Double)]] = Future {
-      tagPass(df, "passD2-spearman")
-      if (!cfg.spearman || numCols.size < 2) Seq.empty
-      else if (cfg.exactSpearman)
-        Stats.spearmanMatrix(df, numCols).collect().toSeq.flatMap { r =>
-          if (r.isNullAt(2)) None
-          else Some((r.getString(0), r.getString(1), r.getDouble(2)))
-        }.sortBy(t => (t._1, t._2))
+    (assoc, catPairsAll.size, catPairs.size)
+  }
+
+  /** Pass D2: the Spearman matrix over the numeric columns — the
+    * window-sort exact form under `cfg.exactSpearman`, else the
+    * map-only GK-grid approximation against `cuts` (pass B's grid, or
+    * the fused profile's GK summaries): one rank/co-moment pass. */
+  private def spearmanPass(df: DataFrame, cfg: ProfilerConfig,
+      numCols: Seq[String], cuts: Map[String, Array[Double]])
+      : Seq[(String, String, Double)] = {
+    tagPass(df, "passD2-spearman")
+    if (!cfg.spearman || numCols.size < 2) Seq.empty
+    else if (cfg.exactSpearman)
+      Stats.spearmanMatrix(df, numCols).collect().toSeq.flatMap { r =>
+        if (r.isNullAt(2)) None
+        else Some((r.getString(0), r.getString(1), r.getDouble(2)))
+      }.sortBy(t => (t._1, t._2))
+    else {
+      val usable = numCols.filter(c => cuts.get(c).exists(_.nonEmpty))
+      if (usable.size < 2) Seq.empty
       else {
-        val clean = df.na.drop(numCols)
-        // grid cuts come FREE when the caller already scanned a
-        // quantile structure (pass B's fused grid agg, or the fused
-        // profile's GK summaries); only a standalone assemble pays
-        // its own chunked percentile agg here
-        val cutMap: Map[String, Array[Double]] =
-          spearmanCutsOverride.getOrElse {
-            val grid = cfg.spearmanGrid
-            val ps = (0 to grid).map(_.toDouble / grid)
-            val gridAggs = numCols.map(c => percentile_approx(
-              col(c).cast("double"), typedLit(ps), lit(2500)).as(c))
-            val cutRow = Stats.chunkedAgg(clean, gridAggs, 300)
-            numCols.map { c =>
-              c -> cutRow(c).asInstanceOf[scala.collection.Seq[Any]]
-                .map(_.asInstanceOf[Double]).toArray
-            }.toMap
-          }
-        val usable = numCols.filter(c =>
-          cutMap.get(c).exists(_.nonEmpty))
-        if (usable.size < 2) Seq.empty
-        else {
-          val ranked = clean.select(usable.map { c =>
-            graft.functions.GridRank.grid_rank(
-              col(c).cast("double"), cutMap(c)).as(c)
-          }: _*)
-          coMomentCorr(ranked, usable).toSeq.collect {
-            case ((a, b), Some(rho)) => (a, b, rho)
-          }.sortBy(t => (t._1, t._2))
-        }
+        val ranked = df.na.drop(numCols).select(usable.map { c =>
+          graft.functions.GridRank.grid_rank(
+            col(c).cast("double"), cuts(c)).as(c)
+        }: _*)
+        coMomentCorr(ranked, usable).toSeq.collect {
+          case ((a, b), Some(rho)) => (a, b, rho)
+        }.sortBy(t => (t._1, t._2))
       }
     }
-    (Await.result(fHist, Duration.Inf),
-      Await.result(fFreq, Duration.Inf),
-      Await.result(fCorr, Duration.Inf),
-      Await.result(fCatAssoc, Duration.Inf),
-      Await.result(fSpearman, Duration.Inf))
-    } finally pool.shutdown()
-    val rejected: Seq[(String, String, Double)] =
-      Stats.rejectFromMatrix(numCols, corrM, cfg.corrReject)
-    val rejectedNames = rejected.map(_._1).toSet
+  }
 
-    // ---- assemble ----
-    val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val columns = allCols.map { c =>
-      val cnt = aLong(s"cnt__$c")
-      val dis = aLong(s"dis__$c")
-      val base = Kinds.baseKind(byName(c))
-      val kind =
-        if (rejectedNames.contains(c)) "CORR"
-        else if (dis == 1) "CONST"
-        else if (dis == cnt && cnt > 1) "UNIQUE"
-        else base
-      val stats: Map[String, Double] =
-        if (base == "NUM")
-          Seq("mean", "min", "max", "sum")
-            .flatMap(k => aDouble(s"${k}__$c").map(k -> _)).toMap ++
-            momentMap.getOrElse(c, Map.empty) ++
-            Map("n_zeros" -> aLong(s"z__$c").toDouble)
-        else if (base == "DATE")
-          Seq("dmn", "dmx").flatMap(k =>
-            Option(aMap(s"${k}__$c"))
-              .map(v => k -> v.asInstanceOf[Long].toDouble)).toMap
-        else Map.empty
-      val qs = qMap.getOrElse(c, Seq.empty)
+  /** Catalyst's optimized-plan size estimate; 0 when unavailable. */
+  private def sizeBytes(df: DataFrame): BigInt =
+    scala.util.Try(df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      .getOrElse(BigInt(0))
+
+  /** The one place a [[TableProfile]] is built, for the exact, the
+    * fused and the store profile alike. Pure: it runs no Spark
+    * action. It owns the kind rule ([[Kinds.kind]]); the `__other__`
+    * frequency row (non-null count − Σ top-K, for every column with a
+    * `topValues` entry); CORR rejection over `corrCols` in that order
+    * ([[Stats.rejectFromMatrix]] on `pearson`); the warnings; and the
+    * table totals. `catAssoc` is pass E's (associations, candidate
+    * pairs, pairs kept). */
+  private[profiler] def assemble(cfg: ProfilerConfig, n: Long,
+      columns: Seq[ColumnStats],
+      histograms: Map[String, Seq[(Long, Long)]],
+      topValues: Map[String, Seq[(String, Long)]],
+      corrCols: Seq[String],
+      pearson: Map[(String, String), Option[Double]],
+      spearman: Seq[(String, String, Double)],
+      catAssoc: (Seq[(String, String, Double)], Int, Int),
+      sizeBytes: BigInt): TableProfile = {
+    val rejected = Stats.rejectFromMatrix(corrCols, pearson, cfg.corrReject)
+    val rejectedNames = rejected.map(_._1).toSet
+    val profiles = columns.map { cs =>
+      val cnt = cs.count
+      val dis = cs.distinct
       ColumnProfile(
-        name = c, kind = kind, count = cnt, missing = n - cnt,
+        name = cs.name,
+        kind = Kinds.kind(cs.base, cnt, dis, rejectedNames(cs.name)),
+        count = cnt, missing = n - cnt,
         pMissing = if (n == 0) 0.0 else (n - cnt).toDouble / n,
         distinct = dis,
         pUnique = if (cnt == 0) 0.0 else dis.toDouble / cnt,
-        stats = stats,
+        stats = cs.stats,
         quantiles =
-          if (qs.isEmpty) Map.empty
-          else Seq("p05", "q1", "median", "q3", "p95").zip(qs).toMap,
-        histogram = histRows.getOrElse(c, Seq.empty),
-        topValues = freqRows.getOrElse(c, Seq.empty))
+          if (cs.quantiles.isEmpty) Map.empty
+          else QuantileNames.zip(cs.quantiles).toMap,
+        histogram = histograms.getOrElse(cs.name, Seq.empty),
+        topValues = topValues.get(cs.name).fold(Seq.empty[(String, Long)]) {
+          vals =>
+            val other = cnt - vals.map(_._2).sum
+            if (other > 0) vals :+ (("__other__", other)) else vals
+        })
     }
 
-    val totalMissing = columns.map(_.missing).sum
-    val warnings0 = columns.flatMap { cp =>
+    val totalMissing = profiles.map(_.missing).sum
+    val colWarnings = profiles.flatMap { cp =>
       val w = scala.collection.mutable.ArrayBuffer.empty[String]
       if (cp.pMissing > 0.5)
         w += s"${cp.name}: ${(cp.pMissing * 100).round}% missing"
@@ -708,31 +672,24 @@ object Profiler {
       }
       w.toSeq
     }
-
-    // pass E computed concurrently above (fCatAssoc) — the candidate
-    // filter there replicates this assembly's CAT-kind derivation
-    val (catAssoc, nAllCatPairs, nCatPairs) = catAssoc0
+    val (catAssociations, nAllCatPairs, nCatPairs) = catAssoc
     val warnings =
       if (cfg.catAssociations && nAllCatPairs > nCatPairs)
-        warnings0 :+ (s"cat associations: $nAllCatPairs pairs " +
+        colWarnings :+ (s"cat associations: $nAllCatPairs pairs " +
           s"capped to $nCatPairs")
-      else warnings0
-
-    // pass D2 (Spearman) computed concurrently above (fSpearman);
-    // the scaladoc moved with the body. spearmanM already sorted.
+      else colWarnings
+    val nvar = profiles.size
 
     TableProfile(n, nvar, totalMissing,
       if (n == 0 || nvar == 0) 0.0
       else totalMissing.toDouble / (n.toDouble * nvar),
-      columns, rejected, warnings,
-      correlations = corrM.toSeq.collect {
+      profiles, rejected, warnings,
+      correlations = pearson.toSeq.collect {
         case ((a, b), Some(rho)) => (a, b, rho)
       }.sortBy(t => (t._1, t._2)),
-      catAssociations = catAssoc,
-      sizeBytes = scala.util.Try(
-        df.queryExecution.optimizedPlan.stats.sizeInBytes)
-        .getOrElse(BigInt(0)),
-      spearman = spearmanM)
+      catAssociations = catAssociations,
+      sizeBytes = sizeBytes,
+      spearman = spearman)
   }
 
   /** Full profile flattened to a tidy queryable DataFrame

@@ -46,6 +46,17 @@ object Kinds {
       .map(_.name).toSeq
   def baseKind(dt: DataType): String =
     if (isNumeric(dt)) "NUM" else if (isDate(dt)) "DATE" else "CAT"
+
+  /** A column's profile kind from its base kind and its non-null and
+    * distinct counts: CORR (rejected) > CONST > UNIQUE > base kind —
+    * the one statement of the precedence (upstream
+    * base.py::describe_1d ≈L270–295 plus the rejection pass). */
+  def kind(base: String, count: Long, distinct: Long,
+      rejected: Boolean = false): String =
+    if (rejected) "CORR"
+    else if (distinct == 1) "CONST"
+    else if (distinct == count && count > 1) "UNIQUE"
+    else base
 }
 
 /** Fused profiling statistics.
@@ -363,11 +374,7 @@ object Stats {
     import spark.implicits._
     cols.map { c =>
       val (cnt, dis) = m(c)
-      val kind =
-        if (dis == 1L) "CONST"
-        else if (dis == cnt && cnt > 1L) "UNIQUE"
-        else Kinds.baseKind(byName(c))
-      (c, kind)
+      (c, Kinds.kind(Kinds.baseKind(byName(c)), cnt, dis))
     }.toDF("col_name", "kind").orderBy("col_name")
   }
 
@@ -490,7 +497,7 @@ object Stats {
     * literals: the r14 form compiled a groups × cols × 5 CASE chain
     * into one expression tree, fine for a bounded facet but a
     * driver-state scale killer on per-domain or per-user keys
-    * (measured at 1M groups in `graft.GroupedScaleSmoke`). Oracle:
+    * (measured at 1M groups, BASELINE.md round 15). Oracle:
     * all-true rows per (group, col, percentile) — scale-invariant,
     * while a sketch regression still fails the compare. */
   def groupedQuantilesRouted(df: DataFrame, groupCol: String,
@@ -1463,7 +1470,7 @@ object Stats {
     * map-only binary-search rank transform — no global sort
     * anywhere, error O(1/grid + ε). */
   /** The exact average-rank transform feeding [[spearmanMatrix]] —
-    * exposed for plan tooling ([[graft.PlanProbe]]).
+    * exposed for plan inspection (plan counts: OPTIMIZATION_r16.md §1).
     *
     * r16: ONE window spec per column instead of two. The average rank
     * of a tie group is (first rank + last rank)/2; rank() gives the
@@ -1861,10 +1868,10 @@ object Stats {
 
   /** Overview variable-type breakdown (upstream's overview panel
     * counts variables per profile kind — NUM/CAT/DATE/CONST/UNIQUE/
-    * CORR, base.py::to_html ≈L400–470). Kind precedence matches the
-    * Profiler: CORR (rejected) > CONST > UNIQUE > dtype bucket. One
-    * cnt/distinct agg + the (driver-side O(k²)-cell) correlation pass;
-    * every collected result is O(k), scale-independent. */
+    * CORR, base.py::to_html ≈L400–470) by the profile's own
+    * [[Kinds.kind]] rule. One cnt/distinct agg + the (O(k²)-cell)
+    * correlation pass; every collected result is O(k),
+    * scale-independent. */
   def kindCounts(df: DataFrame, cols: Seq[String],
       corrThreshold: Double = 0.9): DataFrame = {
     val aggs = count(lit(1)).as("__n") +: cols.flatMap { c =>
@@ -1878,12 +1885,9 @@ object Stats {
       else rejectFromMatrix(numCols,
         collectCorrMatrix(df, numCols), corrThreshold).map(_._1).toSet
     val kindsByCol = cols.map { c =>
-      val cnt = a.getAs[Long](s"cnt__$c")
-      val dis = a.getAs[Long](s"dis__$c")
-      if (rejected.contains(c)) "CORR"
-      else if (dis == 1) "CONST"
-      else if (dis == cnt && cnt > 1) "UNIQUE"
-      else Kinds.baseKind(df.schema(c).dataType)
+      Kinds.kind(Kinds.baseKind(df.schema(c).dataType),
+        a.getAs[Long](s"cnt__$c"), a.getAs[Long](s"dis__$c"),
+        rejected.contains(c))
     }
     val byKind = kindsByCol.groupBy(identity).view.mapValues(_.size.toLong)
     val kindCols = Seq("NUM", "CAT", "DATE", "CONST", "UNIQUE", "CORR")

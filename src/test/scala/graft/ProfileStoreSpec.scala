@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{MultiSketch, MultiSketchBuf}
-import graft.profiler.ProfileStore
+import graft.profiler.{ProfileStore, Profiler, Stats, TableProfile}
 
 /** Incremental profile store: persisted sketch-state merge must equal
   * a fresh whole-corpus scan — exactly where the state is exact, to
@@ -434,24 +434,68 @@ class ProfileStoreSpec extends SparkSpec {
 
   test("MultiSketchStateAgg state bytes round-trip: deserialize → " +
       "finalize equals the struct aggregate's output") {
+    // the fused profile reads every statistic through this round trip
     val df = corpus(0, 5000)
-    val proj = df.select(col("x").as("v"),
-      when(col("x").isNotNull, xxhash64(col("x"))).as("h"))
-    val stBytes = proj.agg(
-        MultiSketch.state(col("v"), col("h"), 256, 10000).as("st"))
-      .first().getAs[Array[Byte]](0)
-    val buf = MultiSketch.deserializeBuf(stBytes, 256, 10000)
-    val struct = proj.agg(
-        MultiSketch.sketch(col("v"), col("h"), 256, 10000).as("ms"))
-      .first().getStruct(0)
-    assert(buf.cnt === struct.getAs[Long]("cnt"))
-    assert(buf.distinctEstimate === struct.getAs[Long]("dis"))
-    assert(buf.n === struct.getAs[Long]("n_num"))
-    assert(buf.mean === struct.getAs[Double]("mean"))
-    assert(buf.mn === struct.getAs[Double]("mn"))
-    assert(buf.mx === struct.getAs[Double]("mx"))
-    assert(buf.sum === struct.getAs[Double]("sm"))
-    assert(buf.nz === struct.getAs[Long]("nz"))
+    for (c <- Seq("x", "y")) {
+      val proj = df.select(col(c).as("v"),
+        when(col(c).isNotNull, xxhash64(col(c))).as("h"))
+      val stBytes = proj.agg(
+          MultiSketch.state(col("v"), col("h"), 256, 10000).as("st"))
+        .first().getAs[Array[Byte]](0)
+      val buf = MultiSketch.deserializeBuf(stBytes, 256, 10000)
+      val struct = proj.agg(
+          MultiSketch.sketch(col("v"), col("h"), 256, 10000, Stats.Ps)
+            .as("ms"))
+        .first().getStruct(0)
+      assert(buf.cnt === struct.getAs[Long]("cnt"))
+      assert(buf.distinctEstimate === struct.getAs[Long]("dis"))
+      assert(buf.n === struct.getAs[Long]("n_num"))
+      assert(buf.mean === struct.getAs[Double]("mean"))
+      assert(buf.m2 === struct.getAs[Double]("m2"), s"$c m2")
+      assert(buf.m3 === struct.getAs[Double]("m3"), s"$c m3")
+      assert(buf.m4 === struct.getAs[Double]("m4"), s"$c m4")
+      assert(buf.mn === struct.getAs[Double]("mn"))
+      assert(buf.mx === struct.getAs[Double]("mx"))
+      assert(buf.sum === struct.getAs[Double]("sm"))
+      assert(buf.nz === struct.getAs[Long]("nz"))
+      buf.gkFlush()
+      val q = buf.qs.compress()
+      assert(Stats.Ps.map(p => q.query(p).get) ===
+        struct.getAs[scala.collection.Seq[Double]]("qs").toSeq, s"$c qs")
+      assert(MultiSketch.serializeGk(q).toSeq ===
+        struct.getAs[Array[Byte]]("gk").toSeq, s"$c GK bytes")
+    }
+  }
+
+  test("storeProfile of one snapshot equals profileFused on the same " +
+      "frame, apart from Spearman and plan size") {
+    // name-ordered schema; string columns with ≤ 32 distinct values
+    // (Misra–Gries counts exact); a date column; amount2 tracks amount
+    // (ρ > 0.9, so it is CORR-rejected); nulls in cat and qty
+    val df = spark.range(0, 3000, 1, 4).select(
+      ((col("id") % 200) * 1.5 + col("id") % 7).as("amount"),
+      ((col("id") % 200) * 3.0 + col("id") % 3).as("amount2"),
+      when(col("id") % 13 === 0, lit(null).cast("string"))
+        .otherwise(concat(lit("k"), (col("id") % 20).cast("string")))
+        .as("cat"),
+      date_add(lit("2020-01-01").cast("date"), (col("id") % 90).cast("int"))
+        .as("day"),
+      col("id"),
+      when(col("id") % 11 === 0, lit(null).cast("int"))
+        .otherwise((col("id") % 50).cast("int")).as("qty"),
+      lit("z").as("zconst"))
+    assert(df.columns.toSeq === df.columns.toSeq.sorted)
+    val path = tmp("pstore_fused")
+    ProfileStore.writeSnapshot(df, path, "d1", k = 1024, accuracy = 10000)
+    val store = ProfileStore.storeProfile(spark, path)
+    val fused = Profiler.profileFused(df)
+    assert(store.rejected.map(_._1) === Seq("amount2"))
+    assert(store.columns.find(_.name == "cat").get.topValues
+      .exists(_._1 == "__other__"))
+    assert(store.columns.find(_.name == "day").get.histogram.nonEmpty)
+    def comparable(p: TableProfile) =
+      p.copy(spearman = Nil, sizeBytes = BigInt(0))
+    assert(comparable(store) === comparable(fused))
   }
 
   test("metricAnomalyFromStore: persisted-state history flags the " +

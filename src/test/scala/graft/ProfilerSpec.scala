@@ -46,6 +46,15 @@ class ProfilerSpec extends SparkSpec {
       Seq("col_name", "metric", "value_num", "value_str"))
   }
 
+  test("SparkEntry.entry returns the tidy profile of lineitem") {
+    assume(new java.io.File(LongFormFixtures.lineitem).exists)
+    val out = SparkEntry.entry(spark)
+    assert(out.schema.map(f => f.name -> f.dataType) === Seq(
+      "col_name" -> StringType, "metric" -> StringType,
+      "value_num" -> DoubleType, "value_str" -> StringType))
+    assert(out.count() > 0)
+  }
+
   test("scale config: approx distinct + approx quantiles still sane") {
     val p = Profiler.profile(df, ProfilerConfig(
       exactQuantiles = false, exactDistinct = false))
