@@ -97,28 +97,22 @@ object Bench {
         .filter(q => selected(q._1)).foreach { case (_, fn) =>
         try { fn(spark, warmDir).collect(); () } catch { case _: Throwable => }
       }
-      import graft.profiler.{Profiler => P, ProfilerConfig => PC}
+      import graft.profiler.{Profiler => P}
       val wli = spark.read.parquet(s"$warmDir/lineitem.parquet")
       try {
         P.profile(wli)
-        P.profile(wli, PC(exactQuantiles = false, exactDistinct = false))
         P.profileFused(wli)
       } catch { case _: Throwable => }
     }
     // flagship timings (VERDICT r1 task 7): the full fixed-job-count
-    // profile of lineitem under the oracle-exact config and under the
-    // 100 TB sketch config (HLL++ distinct + GK quantiles), measured
-    // per round rather than inferred. Not SparkEntry queries — the
-    // profile is the composition the per-stat oracles already cover.
-    import graft.profiler.{Profiler, ProfilerConfig}
+    // profile of lineitem, exact and fused (one sketch scan),
+    // measured per round rather than inferred. Not SparkEntry queries
+    // — the profile is the composition the per-stat oracles already
+    // cover.
+    import graft.profiler.Profiler
     val flagship: Seq[(String, () => Unit)] = Seq(
       "profile_full" -> (() => {
         Profiler.profile(spark.read.parquet(s"$sfDir/lineitem.parquet"))
-        ()
-      }),
-      "profile_full_sketch" -> (() => {
-        Profiler.profile(spark.read.parquet(s"$sfDir/lineitem.parquet"),
-          ProfilerConfig(exactQuantiles = false, exactDistinct = false))
         ()
       }),
       "profile_full_fused" -> (() => {

@@ -183,13 +183,12 @@ object AnnIndex {
   /** (vec_id, codes, mse, cell) in ONE stateless projection — cell
     * assignment and all m PQ argmins computed from the same row, no
     * join, no sort, no shuffle. Being a pure per-row map makes it
-    * legal verbatim on a STREAMING DataFrame (the ingest twin,
-    * [[graft.streaming.StreamProfiler.annEncodeStream]]); slices are
+    * legal verbatim on a STREAMING DataFrame; slices are
     * projected once and the argmin structs extracted once per
     * subspace (the [[VectorQuant.pqEncode]] expression-economy
     * contract). Values are bit-identical to pqEncode ∘ ivfAssign:
     * same rounded argmins, same tie-breaks. */
-  private[graft] def encodeWithCell(base: DataFrame,
+  private def encodeWithCell(base: DataFrame,
       ivfCents: Seq[(Long, Array[Double], Double)],
       cbs: VectorQuant.PqCodebook, pqLo: Long, dim: Int, m: Int)
       : DataFrame = {
@@ -233,7 +232,7 @@ object AnnIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  private[graft] def readCodebooks(spark: SparkSession, path: String,
+  private def readCodebooks(spark: SparkSession, path: String,
       meta: Meta)
       : (Seq[(Long, Array[Double], Double)], VectorQuant.PqCodebook) = {
     val coarse = spark.read.parquet(s"$path/coarse").collect()

@@ -124,9 +124,8 @@ object CatStats {
   }
 
   /** Per-group association over a PRE-AGGREGATED contingency frame
-    * `(grpCol, va, vb, nij)` — the consumer of
-    * [[graft.streaming.StreamProfiler.windowedContingency]]'s output
-    * (grp = the event-time window) or any other sliced contingency:
+    * `(grpCol, va, vb, nij)` — a per-window contingency (grp = the
+    * event-time window) or any other sliced contingency:
     * Cramér's V / Theil's U per group, "did the facet association
     * shift this hour" as a number. Marginals via window sums over
     * the tiny contingency (partitions bounded by card products),
@@ -236,7 +235,7 @@ object CatStats {
     * re-aggregate — the col_distinct_mergeable contract), and point
     * lookups broadcast it. Hashes are the engine's portable 60-bit
     * md5 keys, so any engine rebuilds the identical sketch. */
-  private[graft] def cmBucket(v: Column, i: Column, w: Int): Column =
+  private def cmBucket(v: Column, i: Column, w: Int): Column =
     pmod(conv(substring(md5(concat(v, lit("|"), i.cast("string"))
       .cast("binary")), 1, 15), 16, 10).cast("long"), lit(w.toLong))
 

@@ -907,7 +907,7 @@ object Dedup {
     * (Bloom semantics: no false negatives relative to the banded
     * index; false-positive rate set by mBits/nBloomHashes). The whole
     * plan is Scan→Project — no shuffle, no state — so it runs
-    * verbatim on a STREAMING frame (StreamProfiler delegates here),
+    * verbatim on a STREAMING frame,
     * the same guard contract as BloomPrefilter's contamination flag. */
   def incrementalGuard(df: DataFrame, idCol: String, textCol: String,
       bloomBits: Array[Long], hotShingles: Seq[Long] = Nil,

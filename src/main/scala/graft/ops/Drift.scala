@@ -330,18 +330,14 @@ object Drift {
   // every streaming window) is compared against it. The reference is
   // O(buckets) driver state folded into the plan as constants, so the
   // candidate side needs exactly ONE conditional-sum aggregation and
-  // the scores are closed-form codegen'd arithmetic — which is also
-  // precisely the single-stateful-aggregation shape Structured
-  // Streaming's append mode accepts (see
-  // StreamProfiler.windowedReferenceDrift, this premise's streaming
-  // twin).
+  // the scores are closed-form codegen'd arithmetic.
   // -------------------------------------------------------------------
 
   /** Premise aggregates for [[referenceDrift]]: one conditional-sum
     * counter per reference bucket plus an `__other__` counter for any
     * candidate value outside the reference's bucket set (NULL
     * included). Exactly one aggregation, map-side combined. */
-  private[graft] def refDriftAggs(bucket: Column, refs: Seq[String])
+  private def refDriftAggs(bucket: Column, refs: Seq[String])
       : Seq[Column] = {
     val inRef = coalesce(bucket.isin(refs: _*), lit(false))
     refs.zipWithIndex.map { case (b, i) =>
@@ -355,7 +351,7 @@ object Drift {
     * Laplace-smoothed shares of BOTH sides sum to exactly 1, so their
     * running sums are proper CDFs and KS = max cumulative gap with
     * buckets in the given (caller-sorted) order, `__other__` last. */
-  private[graft] def refDriftStats(refCounts: Seq[(String, Long)])
+  private def refDriftStats(refCounts: Seq[(String, Long)])
       : Seq[Column] = {
     val k = refCounts.size + 1 // + __other__
     val na = refCounts.map(_._2).sum.toDouble

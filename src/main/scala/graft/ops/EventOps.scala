@@ -6,10 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.det.Sig.sig5
 
-/** Event-stream operators, batch form. The same aggregations run
-  * under Structured Streaming in graft.streaming.StreamProfiler
-  * (readStream → watermark → windowed agg); these batch versions are
-  * the DuckDB-checkable equivalents the driver verifies.
+/** Event-stream operators, batch form: the DuckDB-checkable
+  * aggregations the oracle queries verify.
   *
   * Timestamp handling: the events parquet carries TIMESTAMP(NANOS),
   * which Spark only reads as nanosecond LONGs
@@ -132,9 +130,7 @@ object EventOps {
 
   /** Gap-based sessionization (30-min inactivity): lag → new-session
     * flag → running sum as session index → per-session aggregate.
-    * The streaming twin uses flatMapGroupsWithState; this window-
-    * function form is the batch/backfill path. All arithmetic in
-    * exact epoch micros. */
+    * All arithmetic in exact epoch micros. */
   def sessionize(df: DataFrame, gapMinutes: Long = 30L): DataFrame = {
     val gapUs = gapMinutes * 60L * 1000000L
     val byUser = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -384,8 +380,7 @@ object EventOps {
     * window arithmetic as [[windowedStats]], with the bounded
     * len/slide explode factor as the only extra cost — shuffle keys
     * stay (window_start, type). Mirrors Spark's
-    * `window(ts, len, slide)` semantics; the streaming twin is
-    * [[graft.streaming.StreamProfiler.windowedStats]] with a slide. */
+    * `window(ts, len, slide)` semantics. */
   def slidingWindowStats(df: DataFrame, lenUs: Long = HourUs,
       slideUs: Long = HourUs / 2): DataFrame = {
     require(lenUs % slideUs == 0, "len must be a multiple of slide")

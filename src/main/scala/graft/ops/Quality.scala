@@ -17,9 +17,9 @@ import graft.det.Sig
   * partition regardless of input size. Uniqueness is the only
   * expensive primitive: the declared form uses exact
   * `count(DISTINCT)` (the oracle-checkable contract); the corpus
-  * form (`approxUnique = true`, used by the streaming twin and the
-  * scale path) swaps in HLL++ `approx_count_distinct`, which keeps
-  * the whole suite one mergeable map-side pass at any scale.
+  * form (`approxUnique = true`, the scale path) swaps in HLL++
+  * `approx_count_distinct`, which keeps the whole suite one
+  * mergeable map-side pass at any scale.
   *
   * Reference anchor: the upstream profiler surfaces these facts per
   * column (spark_df_profiling describe()'s completeness/distinct
@@ -158,20 +158,13 @@ object Quality {
     }
   }
 
-  /** Compiled metric aggregates for a suite (deduped by alias) —
-    * shared by the batch forms here and the streaming twin
-    * ([[graft.streaming.StreamProfiler.windowedQualityChecks]], which
-    * must use `approxUnique = true`: exact count(DISTINCT) is not
-    * streamable, HLL++ is). */
-  private[graft] def compiledAggs(checks: Seq[Check],
+  /** Compiled metric aggregates for a suite (deduped by alias),
+    * shared by [[runChecks]] and [[runChecksByGroup]]. */
+  private def compiledAggs(checks: Seq[Check],
       approxUnique: Boolean): Seq[Column] =
     checks.flatMap(metricAggs(_, exact = !approxUnique))
       .distinctBy(_._1)
       .map { case (a, c) => c.as(a) }
-
-  /** Per-check result structs over the compiled metric columns. */
-  private[graft] def resultStructs(checks: Seq[Check]): Seq[Column] =
-    checks.map(resultStruct)
 
   /** Evaluate `checks` against `df` in one aggregation scan. Output:
     * one scalar row per check — (check_type, col_name, observed, lo,

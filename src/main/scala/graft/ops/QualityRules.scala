@@ -66,9 +66,9 @@ object QualityRules {
     // fold deletes (value-identical — the oracle still derives
     // top_c from the histogram).
     val topC = topRunExpr
-    // `carry` threads extra df columns (event time, source) through
-    // the projection so stream/slice twins stay map-only instead of
-    // joining back against their own input
+    // `carry` threads extra df columns (e.g. the source) through the
+    // projection so per-slice forms stay map-only instead of joining
+    // back against their own input
     val base = df.select(col(idCol).as("doc_id") +:
         carry.map(col) :+ split(col(textCol), " ").as("w"): _*)
       .select((col("doc_id") +: carry.map(col)) ++ Seq(

@@ -331,7 +331,7 @@ object Similarity {
   /** Map-only IVF cell assignment against an explicit codebook:
     * (vec_id, cell) per input vector — the indexing pass of an
     * IVF index build, usable verbatim on a STREAMING DataFrame
-    * (stateless projection; see StreamProfiler.ivfAssignStream).
+    * (stateless projection).
     * Vectors of the wrong length are dropped (same guard as every
     * vector entry point). */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,

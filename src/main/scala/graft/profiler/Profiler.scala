@@ -10,36 +10,24 @@ import graft.functions.{CoMoment, CoMomentBuf, MultiSketch, MultiSketchBuf}
 
 /** Profiler configuration, mirroring the reference's knobs
   * (spark_df_profiling/__init__.py::ProfileReport ≈L12–30:
-  * bins=10, corr_reject=0.9, sample default) plus scale switches the
-  * reference lacks:
+  * bins=10, corr_reject=0.9, sample default). The profile has two
+  * modes: exact ([[Profiler.profile]], the long-form passes) and fused
+  * ([[Profiler.profileFused]], one sketch scan):
   *
   * @param bins           histogram bucket count
   * @param corrReject     Pearson ρ threshold for variable rejection
   * @param topK           frequency-table size
   * @param sampleRows     head-sample size
-  * @param exactQuantiles exact interpolated percentiles (test scale)
-  *                       vs percentile_approx sketches (100 TB scale)
-  * @param quantilesByDtype reproduce upstream's per-dtype dispatch
-  *                       (describe_integer_1d ≈L150–165 vs
-  *                       describe_float_1d ≈L190–205): integral
-  *                       columns exact, fractional columns approx —
-  *                       overrides `exactQuantiles` when set
-  * @param exactDistinct  exact count(distinct) vs HLL++
-  *                       approx_count_distinct (100 TB scale)
   * @param correlations   compute the O(k²) correlation pass
   * @param fused          run the whole profile through the ONE-scan
   *                       [[Profiler.profileFused]] multi-sketch path
-  *                       (sketch-grade distincts/quantiles/histograms;
-  *                       overrides the exact* switches)
+  *                       (sketch-grade distincts/quantiles/histograms)
   */
 case class ProfilerConfig(
     bins: Int = 10,
     corrReject: Double = 0.9,
     topK: Int = 10,
     sampleRows: Int = 5,
-    exactQuantiles: Boolean = true,
-    quantilesByDtype: Boolean = false,
-    exactDistinct: Boolean = true,
     correlations: Boolean = true,
     fused: Boolean = false,
     /** pairwise Cramér's V over the CAT columns (pandas-profiling
@@ -135,9 +123,10 @@ private[profiler] final case class Sketched(stats: ColumnStats,
   *
   *   pass A: one wide agg — counts, moments, zeros, date min/max for
   *           every column (partial/final hash aggregation, whole-stage
-  *           codegen); HLL++ distincts fuse in here, while EXACT
-  *           countDistinct runs as its own long-form pass (below);
-  *   pass B: all columns' percentiles (and the Spearman grid cuts);
+  *           codegen); exact countDistinct runs as its own long-form
+  *           pass (below);
+  *   pass B: all columns' exact percentiles (and the Spearman grid
+  *           cuts);
   *   pass C: histograms (reusing pass A's bounds) and frequency
   *           tables (results bounded by k·max(bins, topK) rows);
   *   pass D: all k(k−1)/2 Pearson correlations from central co-moment
@@ -147,7 +136,7 @@ private[profiler] final case class Sketched(stats: ColumnStats,
   * on the LONG FORM ([[Stats.longForm]]): one explode of each row to
   * (col_idx, value), fused into the scan's codegen stage, feeding a
   * grouped aggregation — groupBy(col_idx) + countDistinct over typed
-  * slots; groupBy(col_idx) + exact/approx percentiles, final merges
+  * slots; groupBy(col_idx) + exact percentiles, final merges
   * parallel across columns; groupBy(col_idx, bin); groupBy(col_idx,
   * value) + row_number ≤ topK. Spark's JVM-wide codegen cache holds
   * 100 classes, so a pass's plan shape must not depend on the schema:
@@ -159,9 +148,9 @@ private[profiler] final case class Sketched(stats: ColumnStats,
   * The wide single-row aggregations (A, A2) run through bounded-size
   * chunks (several scans instead of one enormous plan past a few
   * hundred columns), and every result collected to the driver is
-  * O(k) — never proportional to row count — so the same plans hold at
-  * 100 TB with `exactQuantiles=false, exactDistinct=false`
-  * (sketch-based paths).
+  * O(k) — never proportional to row count. At a scale where exact
+  * distincts and percentiles cost too much, [[profileFused]] gives the
+  * sketch-grade profile in one scan.
   *
   * Every profile — exact, fused ([[profileFused]]) and the store's
   * ([[ProfileStore.storeProfile]]) — ends in ONE pure assembly,
@@ -217,16 +206,12 @@ object Profiler {
     // input row (k+1)× before the partial aggregation, so fusing them
     // here would push all the cheap codegen'd aggregates through the
     // expanded stream too (measured ~5 s extra at sf0.1 for 11
-    // columns). The HLL++ sketch is a regular declarative aggregate
-    // (no Expand), so the approx path stays fully fused in one scan.
+    // columns).
     val dbl: String => org.apache.spark.sql.Column =
       c => col(c).cast("double")
     val aggsA =
       Seq(count(lit(1)).as("__n")) ++
       allCols.map(c => count(col(c)).as(s"cnt__$c")) ++
-      (if (cfg.exactDistinct) Nil
-       else allCols.map(c =>
-         approx_count_distinct(Stats.orderable(df, c)).as(s"dis__$c"))) ++
       numCols.flatMap { c =>
         // var/sd/skew/kurt come from pass A2's central sums: k×4
         // built-in moment aggregates would overflow the codegen
@@ -254,14 +239,12 @@ object Profiler {
       // distinct aggregation over the long form
       // (Stats.exactDistinctPerCol — no Expand, one job set for any
       // column count).
-      val fDis: Future[Map[String, Any]] =
-        if (!cfg.exactDistinct) Future.successful(Map.empty)
-        else Future {
-          tagPass(df, "passA-distinct")
-          Stats.exactDistinctPerCol(df, allCols).map {
-            case (c, (_, dis)) => s"dis__$c" -> (dis: Any)
-          }
+      val fDis = Future {
+        tagPass(df, "passA-distinct")
+        Stats.exactDistinctPerCol(df, allCols).map {
+          case (c, (_, dis)) => s"dis__$c" -> (dis: Any)
         }
+      }
       // ---- pass B: all quantiles in one grouped agg ----
       // The Spearman grid cuts ride in the SAME scan (one extra
       // percentile_approx — cheap next to the exact percentile
@@ -272,14 +255,9 @@ object Profiler {
         if (numCols.isEmpty) Future.successful((Map.empty, Map.empty))
         else Future {
           tagPass(df, "passB-quantiles")
-          val useApprox = numCols.map { c =>
-            if (cfg.quantilesByDtype)
-              !Kinds.isIntegral(df.schema(c).dataType)
-            else !cfg.exactQuantiles
-          }
           val gridPs = Option.when(wsg)(
             (0 to cfg.spearmanGrid).map(_.toDouble / cfg.spearmanGrid))
-          quantilesLong(df, numCols, useApprox, gridPs)
+          quantilesLong(df, numCols, gridPs)
         }
       val base = await(fBase)
       def bLong(name: String): Long = base(name).asInstanceOf[Long]
@@ -360,9 +338,9 @@ object Profiler {
     * column with no non-null value gets empty values (the wide agg's
     * null). */
   private[graft] def quantilesLong(df: DataFrame, numCols: Seq[String],
-      useApprox: Seq[Boolean], gridPs: Option[Seq[Double]])
+      gridPs: Option[Seq[Double]])
       : (Map[String, Seq[Double]], Map[String, Array[Double]]) = {
-    val rows = Stats.quantilesFrame(df, numCols, useApprox, gridPs)
+    val rows = Stats.quantilesFrame(df, numCols, gridPs)
       .collect().map(r => r.getInt(0) -> r).toMap
     def arrOf(i: Int, name: String): Seq[Double] =
       rows.get(i)
@@ -370,8 +348,7 @@ object Profiler {
         .map(_.map(x => Option(x).map(_.asInstanceOf[Double])
           .getOrElse(Double.NaN)).toSeq)
         .getOrElse(Seq.empty)
-    (numCols.indices.map(i =>
-      numCols(i) -> arrOf(i, if (useApprox(i)) "qa" else "qe")).toMap,
+    (numCols.indices.map(i => numCols(i) -> arrOf(i, "qe")).toMap,
      if (gridPs.isEmpty) Map.empty
      else numCols.indices.map(i => numCols(i) -> arrOf(i, "sg").toArray)
        .toMap)
@@ -390,11 +367,10 @@ object Profiler {
     * frequency tables (and the opt-in passes) still run as their own
     * jobs.
     *
-    * Statistics are sketch-grade where [[profile]]'s sketch config is
-    * sketch-grade (distinct ~1/√k error above k=1024, quantiles at GK
-    * accuracy 10000 — the same class percentile_approx uses) and
-    * exact elsewhere (counts, min/max/sum/zeros; moments exact up to
-    * float summation order). The 100 TB default: one pass over the
+    * Distincts and quantiles are sketch-grade (distinct ~1/√k error
+    * above k=1024, quantiles at GK accuracy 10000 — the same class
+    * percentile_approx uses) and exact elsewhere (counts,
+    * min/max/sum/zeros; moments exact up to float summation order). The 100 TB default: one pass over the
     * corpus instead of three. (`cfg.spearman` — on by default — adds
     * the shared rank-correlation passes on top, same as [[profile]];
     * set it false for the strict single-scan form.) */
@@ -766,24 +742,16 @@ object Profiler {
     // value is GK-merge-order dependent — its own error contract is
     // corr_spearman_approx_err), so paying its passes twice here
     // would be dead cost in the audit.
-    val cfg = ProfilerConfig(exactQuantiles = true,
-      exactDistinct = true, spearman = false)
+    val cfg = ProfilerConfig(spearman = false)
     // r16: the exact profile and the fused profile are independent —
     // run them concurrently (guide §2.6); both results unchanged
-    val (e, f) = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try {
-        val fe = Future { tagPass(df, "check-exact"); profile(df, cfg) }
-        val ff = Future {
-          tagPass(df, "check-fused")
-          profileFused(df, cfg.copy(fused = true))
-        }
-        (Await.result(fe, Duration.Inf), Await.result(ff, Duration.Inf))
-      } finally pool.shutdown()
+    val (e, f) = withPool(2) { implicit ec =>
+      val fe = Future { tagPass(df, "check-exact"); profile(df, cfg) }
+      val ff = Future {
+        tagPass(df, "check-fused")
+        profileFused(df, cfg.copy(fused = true))
+      }
+      (await(fe), await(ff))
     }
     val eCols = e.columns.map(c => c.name -> c).toMap
     val fCols = f.columns.map(c => c.name -> c).toMap

@@ -272,33 +272,21 @@ object Stats {
       .agg(count(lit(1)).as("cnt"), countDistinct(col("v")).as("dis"))
 
   /** The exact profile's pass B over the [[longForm]] of the
-    * double-cast columns: per col_idx, the [[Ps]] percentiles — exact
-    * ([[graft.functions.ExactPercentile]], column "qe") or
-    * percentile_approx at accuracy 10000 where `useApprox(i)` ("qa")
-    * — and, with `gridPs`, the Spearman grid cuts (percentile_approx
-    * at 2500, "sg"), all in ONE groupBy(col_idx) whatever the column
-    * count. Each task's partial buffer for a column holds what the
-    * wide single-row agg's did (the column's values in row order),
-    * and the final merges run in parallel across the hash-partitioned
-    * col_idx keys instead of one single-task merge per job. */
+    * double-cast columns: per col_idx, the exact [[Ps]] percentiles
+    * ([[graft.functions.ExactPercentile]], column "qe") and, with
+    * `gridPs`, the Spearman grid cuts (percentile_approx at 2500,
+    * "sg"), all in ONE groupBy(col_idx) whatever the column count.
+    * Each task's partial buffer for a column holds what the wide
+    * single-row agg's did (the column's values in row order), and the
+    * final merges run in parallel across the hash-partitioned col_idx
+    * keys instead of one single-task merge per job. */
   private[graft] def quantilesFrame(df: DataFrame, cols: Seq[String],
-      useApprox: Seq[Boolean], gridPs: Option[Seq[Double]]): DataFrame = {
-    val i = col("col_idx")
+      gridPs: Option[Seq[Double]]): DataFrame = {
     val v = col("v")
-    def only(approx: Boolean) =
-      if (useApprox.forall(_ == approx)) v
-      else when(typedLit(useApprox).getItem(i) === approx, v)
-    val aggs =
-      (if (useApprox.contains(false))
-        Seq(graft.functions.ExactPercentile.pctl(only(false), Ps).as("qe"))
-       else Nil) ++
-      (if (useApprox.contains(true))
-        Seq(percentile_approx(only(true), typedLit(Ps), lit(10000))
-          .as("qa"))
-       else Nil) ++
-      gridPs.map(ps =>
-        percentile_approx(v, typedLit(ps), lit(2500)).as("sg")).toSeq
-    longForm(df, cols.map(d)).groupBy(i).agg(aggs.head, aggs.tail: _*)
+    val grid = gridPs.map(ps =>
+      percentile_approx(v, typedLit(ps), lit(2500)).as("sg")).toSeq
+    longForm(df, cols.map(d)).groupBy(col("col_idx"))
+      .agg(graft.functions.ExactPercentile.pctl(v, Ps).as("qe"), grid: _*)
   }
 
   // -------------------------------------------------------------------
@@ -673,14 +661,14 @@ object Stats {
     * premise, and the query emits whether each sketch's estimate lands
     * inside `marginSds` standard deviations of it (+1 absolute slack
     * for tiny counts): HLL++ at the default 5% rsd
-    * (approx_count_distinct — the Profiler sketch config) and the KMV
-    * bottom-k sketch at k=1024 (the fused profiler's deterministic
-    * path, exact below k). Both sketches are order-independent for
-    * fixed data (HLL registers are max-merged, the bottom-k set is a
-    * pure set property), so the booleans are stable across
-    * partitionings and cluster sizes — the oracle expects every row
-    * true. A mis-wired rsd/k or a sketch regression flips a boolean
-    * and fails the hash compare. */
+    * (approx_count_distinct, as [[distinct]] uses with `approx`) and
+    * the KMV bottom-k sketch at k=1024 (the fused profiler's
+    * deterministic path, exact below k). Both sketches are
+    * order-independent for fixed data (HLL registers are max-merged,
+    * the bottom-k set is a pure set property), so the booleans are
+    * stable across partitionings and cluster sizes — the oracle
+    * expects every row true. A mis-wired rsd/k or a sketch regression
+    * flips a boolean and fails the hash compare. */
   def distinctSketchCheck(df: DataFrame, cols: Seq[String],
       rsd: Double = 0.05, kmvK: Int = 1024, marginSds: Double = 4.0)
       : DataFrame = {

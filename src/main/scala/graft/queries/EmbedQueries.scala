@@ -134,8 +134,7 @@ object EmbedQueries {
         seedHi = 136L, dim = 64)),
     // the IVF index-build pass on its own: map-only nearest-cell
     // assignment of every corpus vector against the broadcast
-    // codebook — the batch path of the streaming ingest twin
-    // (StreamProfiler.ivfAssignStream); one scalar row per vector
+    // codebook; one scalar row per vector
     "embed_ivf_assign" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.ivfAssign(emb, "vec_id", "embedding",

@@ -37,9 +37,9 @@ object EventsQueries {
       EventOps.sessionLengths(
         EventOps.sessionize(t(s, dir, "events")))),
     // per-hour facet association: Cramér's V / Theil's U between
-    // event_type and the user cohort per event-time window — the
-    // batch twin of StreamProfiler.windowedContingency feeding
-    // CatStats.associationGrouped (drift of facet association)
+    // event_type and the user cohort per event-time window, a
+    // per-window contingency feeding CatStats.associationGrouped
+    // (drift of facet association)
     "events_window_assoc" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       val us = EventOps.tsMicros(ev) // nanos-as-long-safe epoch micros

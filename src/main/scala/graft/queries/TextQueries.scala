@@ -276,9 +276,7 @@ object TextQueries {
     // ingest-guard recall gate: every train doc the EXACT capped
     // overlap join finds (≥1 shared gram) must carry a true Bloom
     // flag — the no-false-negatives guarantee as a hash-checked
-    // boolean column, same pattern as the LSH recall gates. The
-    // streaming twin runs the identical map-only probe
-    // (StreamingSpec asserts stream/batch flag equality).
+    // boolean column, same pattern as the LSH recall gates.
     "text_guard_recall" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val train = docs.where(col("source") =!= "src0")

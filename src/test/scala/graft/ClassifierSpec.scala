@@ -158,4 +158,21 @@ class ClassifierSpec extends SparkSpec {
     assert(!sPlan.contains("Exchange"),
       s"scored must be map-only, got:\n$sPlan")
   }
+
+  test("writeLrModel / loadLrModel round-trip the model bit-exactly") {
+    val s = spark
+    import s.implicits._
+    val train = Seq((1L, "the cat sat on a mat"), (2L, "a b"),
+        (3L, "the a a a a a"), (4L, "is it a dog or cat"))
+      .toDF("doc_id", "text")
+    val m0 = Classifier.train(
+      Classifier.featurize(train, "doc_id", "text", th), iters = 3)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_lr").toString + "/model"
+    Classifier.writeLrModel(m0, path, spark)
+    val m = Classifier.loadLrModel(spark, path)
+    assert(m.mu.toSeq == m0.mu.toSeq &&
+      m.sigma.toSeq == m0.sigma.toSeq &&
+      m.weights.toSeq == m0.weights.toSeq)
+  }
 }

@@ -174,20 +174,15 @@ class LongFormSpec extends SparkSpec {
     frames.foreach { case (name, df) =>
       val cols = Kinds.numericCols(df)
       assert(cols == Seq("d", "nul", "dec", "i"))
-      Seq(Seq(false, false, false, false), Seq(true, true, true, true),
-          Seq(false, true, true, false)).foreach { approx =>
-        val (q, grid) = Profiler.quantilesLong(df, cols, approx, Some(gridPs))
-        cols.zipWithIndex.foreach { case (c, i) =>
-          val r = df.agg(
-            ExactPercentile.pctl(dbl(c), Stats.Ps),
-            percentile_approx(dbl(c), typedLit(Stats.Ps), lit(10000)),
-            percentile_approx(dbl(c), typedLit(gridPs), lit(2500))).first()
-          def arr(j: Int): Seq[Double] =
-            Option(r.getSeq[Double](j)).map(_.toSeq).getOrElse(Seq.empty)
-          assert(bits(q(c)) == bits(arr(if (approx(i)) 1 else 0)),
-            s"$name.$c $approx")
-          assert(bits(grid(c).toSeq) == bits(arr(2)), s"$name.$c grid")
-        }
+      val (q, grid) = Profiler.quantilesLong(df, cols, Some(gridPs))
+      cols.foreach { c =>
+        val r = df.agg(
+          ExactPercentile.pctl(dbl(c), Stats.Ps),
+          percentile_approx(dbl(c), typedLit(gridPs), lit(2500))).first()
+        def arr(j: Int): Seq[Double] =
+          Option(r.getSeq[Double](j)).map(_.toSeq).getOrElse(Seq.empty)
+        assert(bits(q(c)) == bits(arr(0)), s"$name.$c")
+        assert(bits(grid(c).toSeq) == bits(arr(1)), s"$name.$c grid")
       }
     }
   }
@@ -225,7 +220,7 @@ class LongFormSpec extends SparkSpec {
       // typed imperative aggregates plan an ObjectHashAggregate, which
       // has no codegen: same stage, no exchange, but its own operator
       "quantiles" -> (Stats.quantilesFrame(df, num,
-        num.map(_ => false), Some(Seq(0.0, 0.5, 1.0))), false))
+        Some(Seq(0.0, 0.5, 1.0))), false))
     passes.foreach { case (name, (frame, codegen)) =>
       frame.collect()
       val all = nodes(frame.queryExecution.executedPlan)
@@ -256,7 +251,7 @@ class LongFormSpec extends SparkSpec {
       .count() <= 20L)
     assert(Stats.topValues(Stats.freqCounts(df, Seq("s")), 10)
       .count() == 10L)
-    assert(Stats.quantilesFrame(df, Seq("id", "x"), Seq(false, false),
-      Some(Seq(0.0, 1.0))).count() == 2L)
+    assert(Stats.quantilesFrame(df, Seq("id", "x"), Some(Seq(0.0, 1.0)))
+      .count() == 2L)
   }
 }

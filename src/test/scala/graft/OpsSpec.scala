@@ -839,4 +839,18 @@ class OpsSpec extends SparkSpec {
     assert(r.head.getAs[Long]("cnt") == 2L)
     assert(r.head.getAs[Double]("avg_value") == 2.0)
   }
+
+  test("slidingWindowStats: one event lands in len/slide overlapping " +
+      "windows") {
+    val s = spark
+    import s.implicits._
+    // 00:40 with a 1-hour window sliding by 30 minutes → the windows
+    // starting 00:00 and 00:30
+    val ev = Seq((new java.sql.Timestamp(40L * 60000L), "a", 2.0))
+      .toDF("ts", "event_type", "value")
+      .withColumn("event_id", org.apache.spark.sql.functions.lit(1L))
+    val starts = EventOps.slidingWindowStats(ev).collect()
+      .map(_.getLong(0)).sorted.toSeq
+    assert(starts == Seq(0L, 1800000000L))
+  }
 }

@@ -276,42 +276,6 @@ class ProfileStoreSpec extends SparkSpec {
       === 1.0)
   }
 
-  test("profileStoreSink: streaming micro-batches build the same " +
-      "store the batch appends build — merged profile matches a " +
-      "whole-corpus snapshot on exact fields") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val path = tmp("pstore_stream")
-    val mem = MemoryStream[(Long, Double, String)]
-    val stream = mem.toDF().toDF("id", "x", "cat")
-    val q = graft.streaming.StreamProfiler
-      .profileStoreSink(stream, path)
-      .outputMode("append")
-      .option("checkpointLocation", tmp("pstore_stream_ck"))
-      .start()
-    try {
-      mem.addData((0L until 500L).map(i =>
-        (i, (i % 7).toDouble, s"c${i % 13}")): _*)
-      q.processAllAvailable()
-      mem.addData((500L until 800L).map(i =>
-        (i, (i % 7).toDouble, s"c${i % 13}")): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val prof = ProfileStore.mergedProfile(spark, path)
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(prof("id").getLong(prof("id").fieldIndex("n_rows"))
-      === 800L)
-    assert(prof("x").getDouble(prof("x").fieldIndex("max_val"))
-      === 6.0)
-    assert(prof("cat").getLong(prof("cat").fieldIndex("distinct_est"))
-      === 13L)
-    // two snapshots exist, named by batch id
-    val ids = spark.read.parquet(s"$path/state")
-      .select("snapshot_id").distinct()
-      .collect().map(_.getString(0)).sorted
-    assert(ids === Array("batch000000", "batch000001"))
-  }
-
   test("compactSnapshots: folding history into one snapshot leaves " +
       "the merged profile unchanged where exact, within bounds " +
       "where sketched, and shrinks the state") {

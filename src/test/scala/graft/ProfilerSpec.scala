@@ -56,26 +56,31 @@ class ProfilerSpec extends SparkSpec {
   }
 
   test("scale config: approx distinct + approx quantiles still sane") {
-    val p = Profiler.profile(df, ProfilerConfig(
-      exactQuantiles = false, exactDistinct = false))
+    val p = Profiler.profileFused(df)
     val x = p.columns.find(_.name == "x").get
     assert(math.abs(x.quantiles("median") - 9.5) <= 1.0)
-    assert(x.distinct >= 17 && x.distinct <= 23) // HLL estimate (5% rsd)
+    assert(x.distinct >= 17 && x.distinct <= 23) // KMV estimate
   }
 
   test("fused single-scan profile matches the pass-based profile") {
     // small fixture: every sketch is below capacity, so distinct is
     // exact (compare vs the exact profile) and GK quantiles return
-    // the same elements percentile_approx does (compare vs the
-    // sketch-config profile — the exact path INTERPOLATES, which no
-    // element-returning sketch reproduces)
+    // the same elements percentile_approx does (compare vs Spark's
+    // percentile_approx per numeric column — the exact path
+    // INTERPOLATES, which no element-returning sketch reproduces)
+    import org.apache.spark.sql.functions.{col, lit, percentile_approx,
+      typedLit}
     val exact = Profiler.profile(df, ProfilerConfig())
-    val sketch = Profiler.profile(df,
-      ProfilerConfig(exactQuantiles = false, exactDistinct = false))
     val fused = Profiler.profileFused(df, ProfilerConfig())
     assert(fused.n == exact.n && fused.nvar == exact.nvar)
     val e = exact.columns.map(c => c.name -> c).toMap
-    val sk = sketch.columns.map(c => c.name -> c).toMap
+    val names = Seq("p05", "q1", "median", "q3", "p95")
+    val sk: Map[String, Map[String, Double]] =
+      graft.profiler.Kinds.numericCols(df).map { c =>
+        c -> names.zip(df.agg(percentile_approx(col(c).cast("double"),
+          typedLit(graft.profiler.Stats.Ps), lit(10000))).first()
+          .getSeq[Double](0)).toMap
+      }.toMap
     fused.columns.foreach { f =>
       val x = e(f.name)
       assert(f.kind == x.kind, s"${f.name} kind")
@@ -87,7 +92,7 @@ class ProfilerSpec extends SparkSpec {
         assert(math.abs(fv - v) <= 1e-9 * math.max(1.0, math.abs(v)),
           s"${f.name}.$k0: fused $fv vs exact $v")
       }
-      sk(f.name).quantiles.foreach { case (k0, v) =>
+      sk.getOrElse(f.name, Map.empty).foreach { case (k0, v) =>
         assert(math.abs(f.quantiles(k0) - v) <= 1e-12,
           s"${f.name}.$k0 quantile: fused ${f.quantiles(k0)} vs GK $v")
       }
@@ -199,8 +204,7 @@ class ProfilerSpec extends SparkSpec {
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
       val df = spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
-      val p = Profiler.profile(df, ProfilerConfig(
-        exactDistinct = false, exactQuantiles = false))
+      val p = Profiler.profile(df)
       assert(p.n > 0, s"$t rows")
       assert(p.columns.size == df.columns.length, s"$t columns")
       assert(p.columns.forall(_.count <= p.n), s"$t counts")

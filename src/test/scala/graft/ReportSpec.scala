@@ -60,9 +60,8 @@ class ReportSpec extends SparkSpec {
   test("overview renders plan-size via fmt_bytesize and separated " +
       "counts (formatters.py parity)") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    val p = graft.profiler.Profiler.profile(li,
-      graft.profiler.ProfilerConfig(exactQuantiles = false,
-        exactDistinct = false, correlations = false))
+    val p = graft.profiler.Profiler.profileFused(li,
+      graft.profiler.ProfilerConfig(correlations = false))
     assert(p.sizeBytes > 0, "plan size estimate must be available")
     val html = graft.report.HtmlReport.render(p)
     assert(html.contains("Total size"))
@@ -77,8 +76,7 @@ class ReportSpec extends SparkSpec {
     import graft.ops.Quality._
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val rep = ProfileReport(li,
-      graft.profiler.ProfilerConfig(exactQuantiles = false,
-        exactDistinct = false, correlations = false))
+      graft.profiler.ProfilerConfig(fused = true, correlations = false))
     assert(!rep.html.contains("Quality checks"))
     val html = rep.htmlWithChecks(Seq(
       Completeness("l_quantity", 1.0),           // passes

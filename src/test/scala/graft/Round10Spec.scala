@@ -263,52 +263,6 @@ class Round10Spec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [cell"))
   }
 
-  test("annEncodeStream: streaming ingest encode against the frozen " +
-      "index codebooks equals the batch append, row for row") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = synthEmb(260, 8)
-    val a = all.where(col("vec_id") < 220)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_annidx_stream").toString
-    AnnIndex.writeAnnIndex(a, "vec_id", "embedding", path,
-      ivfLo = 100L, ivfHi = 106L, pqLo = 110L, pqHi = 116L,
-      dim = 8, m = 4, iters = 2, coarseIters = 2)
-    // stream the 40-vector batch through the ingest twin
-    val mem = MemoryStream[(Long, Array[Float])]
-    val enc = graft.streaming.StreamProfiler.annEncodeStream(
-      spark, path, mem.toDF().toDF("vec_id", "embedding"),
-      "vec_id", "embedding")
-    val q = enc.writeStream.format("memory").queryName("annenc")
-      .outputMode("append").start()
-    try {
-      mem.addData((220 until 260).map(i =>
-        (i.toLong, synthVec(i.toLong, 8))): _*)
-      q.processAllAvailable()
-      val got = spark.table("annenc")
-        .select(col("vec_id"), col("cell"),
-          concat_ws(",", col("codes")).as("cs"), col("mse"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getDouble(3))).sortBy(_._1)
-      // batch reference: appendAnnIndex over the same 40 vectors
-      AnnIndex.appendAnnIndex(all.where(col("vec_id") >= 220),
-        "vec_id", "embedding", path, dim = 8, m = 4)
-      val want = spark.read.parquet(s"$path/codes")
-        .where(col("vec_id") >= 220)
-        .select(col("vec_id"), col("cell").cast("long"),
-          concat_ws(",", col("codes")).as("cs"), col("mse"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getDouble(3))).sortBy(_._1)
-      assert(got.length == 40)
-      assert(got.toSeq == want.toSeq,
-        "stream encode must equal the batch append exactly")
-    } finally q.stop()
-  }
-
   // ---- embedding-quality eval (labeled column) ----
 
   /** Cleanly clustered labeled fixture: label = id mod 4, vector =

@@ -331,4 +331,19 @@ class Round5OpsSpec extends SparkSpec {
     assert(math.abs(r("b").getAs[Double]("sd") -
       math.sqrt(50.0)) < 1e-3)
   }
+
+  test("referenceDrift: the reference mix scores zero drift, a " +
+      "drifted mix does not") {
+    val s = spark
+    import s.implicits._
+    val ref = Seq("a" -> 3L, "b" -> 1L)
+    def drift(vals: String*) = graft.ops.Drift.referenceDrift(
+      vals.toDF("event_type"), "w", col("event_type"), ref).collect()(0)
+    val same = drift("a", "a", "a", "b")
+    assert(same.getAs[Double]("psi") == 0.0)
+    assert(same.getAs[Double]("ks") == 0.0)
+    // c is outside the reference buckets
+    assert(drift("a", "b", "c", "a").getAs[Double]("psi") > 0.0)
+    assert(drift("b", "b", "c", "b").getAs[Double]("psi") > 0.5)
+  }
 }

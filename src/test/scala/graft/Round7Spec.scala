@@ -1,25 +1,19 @@
 package graft
 
-import java.sql.Timestamp
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TopKByScore
 import graft.ops.{CatStats, Dedup, Sampling, Similarity, VectorQuant}
 import graft.profiler.Stats
-import graft.streaming.StreamProfiler
 
-case class VecEv(ts: Timestamp, vec_id: Long, embedding: Seq[Double])
 case class Doc(doc_id: Long, text: String)
 
 /** Round-7 additions: bounded top-k similarity tail, scalar-row PQ
-  * output, date histograms, streaming IVF assignment, and the
-  * harness-compatibility (scalar-only output schema) sweep. */
+  * output, date histograms, and the harness-compatibility
+  * (scalar-only output schema) sweep. */
 class Round7Spec extends SparkSpec {
   import scala.jdk.CollectionConverters._
-
-  private def t(min: Long) = new Timestamp(min * 60000L)
 
   /** Scalar = hashable by a pandas-based comparator: no nested types. */
   private def isScalar(dt: DataType): Boolean = dt match {
@@ -313,11 +307,10 @@ class Round7Spec extends SparkSpec {
       s"persisted-index probe must equal direct: $viaIndex vs $direct")
   }
 
-  test("incrementalGuardStream: stateless Bloom band probe flags " +
-      "catalog near-dups at ingest, batch-equal") {
+  test("incrementalGuard: stateless Bloom band probe flags catalog " +
+      "near-dups at ingest") {
     val sql = spark
     import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val base = (1 to 14).map(i => s"tok$i").mkString(" ")
     val catalog = docs((0L, base), (1L, base + " tailA"),
       (2L, (30 to 45).map(i => s"other$i").mkString(" ")))
@@ -327,24 +320,11 @@ class Round7Spec extends SparkSpec {
     val incoming = Seq(
       Doc(100L, base + " tailB"), // near-dup of the catalog pair
       Doc(101L, (60 to 75).map(i => s"fresh$i").mkString(" ")))
-    // batch form of the same guard
-    val batchFlags = graft.ops.Dedup.incrementalGuard(
+    val flags = graft.ops.Dedup.incrementalGuard(
       incoming.toDF(), "doc_id", "text", bits)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(batchFlags(100L), "near-dup must be flagged")
-    assert(!batchFlags(101L), "fresh doc must pass")
-    // streaming: same rows through a MemoryStream
-    val mem = MemoryStream[Doc]
-    val q = StreamProfiler.incrementalGuardStream(mem.toDF(), bits)
-      .writeStream.format("memory").queryName("incguard")
-      .outputMode("append").start()
-    try {
-      mem.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("incguard").collect()
-        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      assert(got == batchFlags, "stream/batch guard must agree")
-    } finally q.stop()
+    assert(flags(100L), "near-dup must be flagged")
+    assert(!flags(101L), "fresh doc must pass")
   }
 
   // ---------------------------------------------------------------
@@ -432,114 +412,6 @@ class Round7Spec extends SparkSpec {
   // ---------------------------------------------------------------
   // Streaming IVF twin
   // ---------------------------------------------------------------
-
-  test("ivfAssignStream: stateless assignment equals the batch " +
-      "ivfAssign on the same rows") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val batch = randVecs(40, 4, seed = 17L)
-    val cents = Similarity.seedCodebook(batch, "vec_id", "embedding",
-      0L, 4L)
-    val expected = Similarity
-      .ivfAssign(batch, "vec_id", "embedding", cents, dim = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rows = batch.collect().zipWithIndex.map { case (r, i) =>
-      VecEv(t(i.toLong), r.getLong(0), r.getSeq[Double](1))
-    }
-    val mem = MemoryStream[VecEv]
-    val q = StreamProfiler.ivfAssignStream(mem.toDF(), "vec_id",
-        "embedding", cents, dim = 4)
-      .writeStream.format("memory").queryName("ivfassign")
-      .outputMode("append").start()
-    try {
-      // two micro-batches: batch/stream equality must not depend on
-      // how rows split across triggers (it's a stateless projection)
-      mem.addData(rows.take(15).toSeq)
-      q.processAllAvailable()
-      mem.addData(rows.drop(15).toSeq)
-      q.processAllAvailable()
-      val got = spark.table("ivfassign").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected)
-    } finally q.stop()
-  }
-
-  test("windowedHeavyHitters: MG state survives a query RESTART from " +
-      "a real checkpoint (v2 wire format through the state store)") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_hh_ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_hh_out").toString
-    val mem = MemoryStream[Ev]
-    def start() = StreamProfiler.windowedHeavyHitters(mem.toDF(), "ts",
-        "event_type", k = 4, watermark = "10 minutes")
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    // run 1: half the window's items, then STOP — the MG buffer
-    // persists serialized in the state store
-    val q1 = start()
-    mem.addData((1 to 6).map(i => Ev(t(i.toLong), "a", 1.0)) ++
-      (7 to 8).map(i => Ev(t(i.toLong), "b", 1.0)): _*)
-    q1.processAllAvailable()
-    q1.stop()
-    // run 2: a fresh query instance DESERIALIZES that state, merges
-    // the rest of the window, and the watermark closes it
-    val q2 = start()
-    try {
-      mem.addData(Ev(t(9), "a", 1.0), Ev(t(10), "a", 1.0),
-        Ev(t(11), "c", 1.0))
-      q2.processAllAvailable()
-      mem.addData(Ev(t(5000), "z", 1.0))
-      q2.processAllAvailable()
-      val rows = spark.read.parquet(out)
-        .where(col("window_start_us") === 0L).collect()
-      assert(rows.length == 1, "window 0 must close exactly once")
-      val r = rows.head
-      assert(r.getAs[Long]("n") == 11L,
-        "stream length must count BOTH sides of the restart")
-      val items = r.getAs[Map[String, Long]]("items")
-      // MG guarantees on the merged-through-checkpoint state:
-      // a (true 8) must survive with est in [true - n/(k+1), true]
-      assert(items.contains("a"), s"dominant item lost: $items")
-      assert(items("a") <= 8L && items("a") >= 8L - 11L / 5L,
-        s"MG bound violated: $items")
-    } finally q2.stop()
-  }
-
-  test("windowedCellCounts: per-window occupancy sums to arrivals") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val batch = randVecs(30, 4, seed = 19L)
-    val cents = Similarity.seedCodebook(batch, "vec_id", "embedding",
-      0L, 3L)
-    val rows = batch.collect().zipWithIndex.map { case (r, i) =>
-      VecEv(t(i.toLong), r.getLong(0), r.getSeq[Double](1))
-    }
-    val mem = MemoryStream[VecEv]
-    val q = StreamProfiler.windowedCellCounts(mem.toDF(), "vec_id",
-        "embedding", cents, tsCol = "ts", dim = 4,
-        watermark = "10 minutes", windowLen = "1 hour")
-      .writeStream.format("memory").queryName("cellcounts")
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.toSeq)
-      q.processAllAvailable()
-      mem.addData(VecEv(t(10000L), 999L, Seq(1.0, 0.0, 0.0, 0.0)))
-      q.processAllAvailable() // watermark advance closes hour 0
-      val out = spark.table("cellcounts")
-        .where(col("window_start_us") === 0L).collect()
-      assert(out.map(_.getLong(2)).sum == 30L,
-        "hour-0 occupancy must count every arrival exactly once")
-      assert(out.forall(r => cents.exists(_._1 == r.getLong(1))),
-        "cells must come from the codebook")
-    } finally q.stop()
-  }
 
   // ---------------------------------------------------------------
   // PQ asymmetric-distance (ADC) search
@@ -772,36 +644,6 @@ class Round7Spec extends SparkSpec {
     }
   }
 
-  test("windowedContingency: closed-window counts equal the batch " +
-      "contingency on the same rows") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    case class Ev(ts: Timestamp, a: String, b: String)
-    val rows = (0 until 40).map(i =>
-      Ev(t(i.toLong), s"a${i % 2}", s"b${i % 3}"))
-    val mem = MemoryStream[(Timestamp, String, String)]
-    val q = StreamProfiler.windowedContingency(
-        mem.toDF().toDF("ts", "a", "b"), "a", "b",
-        watermark = "10 minutes", windowLen = "1 hour")
-      .writeStream.format("memory").queryName("contingency")
-      .outputMode("append").start()
-    try {
-      mem.addData(rows.map(e => (e.ts, e.a, e.b)))
-      q.processAllAvailable()
-      mem.addData((t(10000L), "a0", "b0")) // watermark closes hour 0
-      q.processAllAvailable()
-      val got = spark.table("contingency")
-        .where(col("window_start_us") === 0L).collect()
-        .map(r => (r.getString(1), r.getString(2)) -> r.getLong(3))
-        .toMap
-      val expected = rows.groupBy(e => (e.a, e.b))
-        .map { case (k, v) => k -> v.size.toLong }
-      assert(got == expected,
-        s"window-0 contingency mismatch: $got vs $expected")
-    } finally q.stop()
-  }
-
   test("profile catAssociations: pair explosion is capped with a " +
       "warning") {
     val sql = spark
@@ -855,33 +697,4 @@ class Round7Spec extends SparkSpec {
       Set("train", "val", "test")))
   }
 
-  test("splitAssignStream: stream-static routing equals the batch " +
-      "splitAssign on the same rows") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // static cluster map: docs 0..9 pair up into 5 clusters
-    val clusters = (0L until 10L).map(i => (i, i / 2 * 2))
-      .toDF("doc_id", "cluster_id")
-    val docs = (0L until 40L).map(i => (i, s"text $i"))
-      .toDF("doc_id", "text")
-    val expected = Sampling.splitAssign(docs, clusters, "doc_id")
-      .collect().map(r => r.getAs[Long]("doc_id") ->
-        r.getAs[String]("split")).toMap
-    val mem = MemoryStream[Doc]
-    val q = StreamProfiler.splitAssignStream(mem.toDF(), clusters,
-        "doc_id")
-      .select("doc_id", "split")
-      .writeStream.format("memory").queryName("splitroute")
-      .outputMode("append").start()
-    try {
-      mem.addData((0L until 25L).map(i => Doc(i, s"text $i")))
-      q.processAllAvailable()
-      mem.addData((25L until 40L).map(i => Doc(i, s"text $i")))
-      q.processAllAvailable()
-      val got = spark.table("splitroute").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got == expected)
-    } finally q.stop()
-  }
 }

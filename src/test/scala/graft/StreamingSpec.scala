@@ -1,435 +1,13 @@
 package graft
 
-import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import graft.streaming.StreamProfiler
 
-case class Ev(ts: Timestamp, event_type: String, value: Double)
-case class UrlDoc(ts: Timestamp, url: String, text: String)
-case class GrpEv(ts: Timestamp, src: String, event_type: String)
 case class StreamDoc(doc_id: Long, text: String)
-case class TsDoc(ts: Timestamp, doc_id: Long, text: String)
-case class UserEv(ts: Timestamp, user_id: Long)
-case class SideEv(ts: Timestamp, user_id: Long, event_id: Long,
-    event_type: String, value: Double)
 
+/** Batch operators that also run unchanged on a streaming DataFrame
+  * (stateless projections and filters), plus the persisted
+  * classifier model's layout guard. */
 class StreamingSpec extends SparkSpec {
-
-  private def t(min: Long) = new Timestamp(min * 60000L)
-
-  test("windowed stream agg matches the batch equivalent; late data dropped") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamProfiler
-      .windowedStats(mem.toDF(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("winstats")
-      .outputMode("append").start()
-    try {
-      // batch 1: two events in hour 0, one in hour 1
-      mem.addData(Ev(t(5), "a", 1.0), Ev(t(20), "a", 3.0),
-        Ev(t(70), "a", 5.0))
-      q.processAllAvailable()
-      // batch 2: advance watermark far => hour-0/1 windows close;
-      // also inject a LATE hour-0 event that must be dropped
-      mem.addData(Ev(t(500), "a", 7.0), Ev(t(6), "a", 100.0))
-      q.processAllAvailable()
-      mem.addData(Ev(t(2000), "a", 9.0))
-      q.processAllAvailable()
-      val out = spark.table("winstats")
-        .orderBy("window_start_us").collect()
-      val hour0 = out.find(_.getLong(0) == 0L).get
-      assert(hour0.getAs[Long]("cnt") == 2L,
-        "late event beyond watermark must not be counted")
-      assert(hour0.getAs[Double]("avg_value") == 2.0)
-      val hour1 = out.find(_.getLong(0) == 3600000000L).get
-      assert(hour1.getAs[Long]("cnt") == 1L)
-      // batch equivalence on the closed hour-0 window
-      val batch = graft.ops.EventOps.windowedStats(
-        Seq(Ev(t(5), "a", 1.0), Ev(t(20), "a", 3.0)).toDF()
-          .withColumn("event_id", lit(1L)))
-        .collect().head
-      assert(batch.getAs[Long]("cnt") == hour0.getAs[Long]("cnt"))
-      assert(batch.getAs[Double]("avg_value") ==
-        hour0.getAs[Double]("avg_value"))
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops duplicate keys within the watermark") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamProfiler.dedupWithinWatermark(
-      mem.toDF(), Seq("event_type"), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("dedupstream")
-      .outputMode("append").start()
-    try {
-      mem.addData(Ev(t(1), "a", 1.0), Ev(t(2), "a", 2.0),
-        Ev(t(3), "b", 3.0))
-      q.processAllAvailable()
-      mem.addData(Ev(t(4), "a", 4.0)) // still within horizon => dropped
-      q.processAllAvailable()
-      val out = spark.table("dedupstream").collect()
-      assert(out.map(_.getAs[String]("event_type")).sorted.toSeq ==
-        Seq("a", "b"))
-      assert(out.find(_.getAs[String]("event_type") == "a").get
-        .getAs[Double]("value") == 1.0) // first occurrence wins
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionizer matches batch sessionize; " +
-      "timeout closes the final session") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[UserEv]
-    val q = StreamProfiler.sessionizeStream(
-      mem.toDF(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("sess")
-      .outputMode("append").start()
-    try {
-      // events sit an hour past epoch: a row exactly AT the initial
-      // watermark (0) is dropped by the pre-state late-row filter.
-      // user 1: events at minutes 60,70 (one session), then 110
-      // (40-min gap => new session); user 2: single event at 65
-      // (strictly past the batch-2 watermark of t(60))
-      mem.addData(UserEv(t(60), 1L), UserEv(t(70), 1L))
-      q.processAllAvailable()
-      mem.addData(UserEv(t(110), 1L), UserEv(t(65), 2L))
-      q.processAllAvailable()
-      // advance the watermark far past every open session + gap so
-      // event-time timeouts fire and emit the final sessions
-      mem.addData(UserEv(t(5000), 99L))
-      q.processAllAvailable()
-      // user 1 returns AFTER their sessions were timeout-closed: the
-      // tombstone must continue the index at 3, not restart at 1
-      mem.addData(UserEv(t(6000), 1L))
-      q.processAllAvailable()
-      mem.addData(UserEv(t(10000), 99L))
-      q.processAllAvailable()
-      val out = spark.table("sess")
-        .select("user_id", "session_idx", "session_start_us",
-          "session_end_us", "n_events")
-        .where(col("user_id").isin(1L, 2L))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      val min = 60000000L // µs
-      assert(out((1L, 1L)) == (60L * min, 70L * min, 2L))
-      assert(out((1L, 2L)) == (110L * min, 110L * min, 1L))
-      assert(out((1L, 3L)) == (6000L * min, 6000L * min, 1L))
-      assert(out((2L, 1L)) == (65L * min, 65L * min, 1L))
-      // batch equivalence on the same events
-      val batch = graft.ops.EventOps.sessionize(
-        Seq(UserEv(t(60), 1L), UserEv(t(70), 1L), UserEv(t(110), 1L),
-          UserEv(t(6000), 1L), UserEv(t(65), 2L)).toDF()
-          .withColumn("event_id", monotonically_increasing_id()))
-        .collect()
-        .map(r => (r.getLong(0), r.getAs[Long]("session_idx")) ->
-          (r.getAs[Long]("session_start_us"),
-            r.getAs[Long]("session_end_us"),
-            r.getAs[Long]("n_events"))).toMap
-      assert(batch.view.filterKeys(_._1 != 99L).toMap ==
-        out.view.filterKeys(_._1 != 99L).toMap)
-    } finally q.stop()
-  }
-
-  test("streaming as-of join matches the batch operator on an " +
-      "in-order feed; state carries across micro-batches") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SideEv]
-    val q = StreamProfiler.asofStream(
-      mem.toDF(), leftType = "click", rightType = "purchase",
-      toleranceUs = Some(30L * 60000000L))
-      .writeStream.format("memory").queryName("asof")
-      .outputMode("append").start()
-    val all = Seq(
-      SideEv(t(60), 1L, 1L, "click", 0.0),     // before any purchase
-      SideEv(t(62), 1L, 2L, "purchase", 5.0),
-      SideEv(t(63), 1L, 3L, "click", 0.0),     // matches id 2
-      SideEv(t(70), 1L, 4L, "purchase", 7.0),
-      SideEv(t(70), 1L, 5L, "click", 0.0),     // same-ts: inclusive, id 4
-      SideEv(t(200), 1L, 6L, "click", 0.0),    // gap 130 min > tolerance
-      SideEv(t(205), 2L, 7L, "click", 0.0))    // user with no purchases
-    try {
-      mem.addData(all.take(3): _*)
-      q.processAllAvailable()
-      mem.addData(all.slice(3, 5): _*)  // same-ts pair in a new batch
-      q.processAllAvailable()
-      mem.addData(all.drop(5): _*)      // state must persist to here
-      q.processAllAvailable()
-      val stream = spark.table("asof").orderBy("event_id").collect()
-      val m = stream.map(r => r.getLong(0) -> r).toMap
-      assert(m(1L).isNullAt(3) && m(6L).isNullAt(3) && m(7L).isNullAt(3))
-      assert(m(3L).getLong(3) == 2L && m(3L).getDouble(6) == 5.0)
-      assert(m(5L).getLong(3) == 4L) // inclusive same-ts match
-      // batch equivalence over the identical event set
-      val b = all.toDF()
-      val base = b.select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
-        col("event_type"), col("value"))
-      val batch = graft.ops.TemporalJoin.asofJoin(
-        base.where(col("event_type") === "click")
-          .select("event_id", "user_id", "us"),
-        base.where(col("event_type") === "purchase")
-          .select("event_id", "user_id", "us", "value"),
-        "user_id", "us", "event_id", Seq("value"),
-        toleranceUs = Some(30L * 60000000L)).collect()
-      assert(stream.map(_.toSeq).toSeq == batch.map(_.toSeq).toSeq)
-    } finally q.stop()
-  }
-
-  test("windowed numeric profile emits per-column rows") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamProfiler.windowedNumericProfile(
-      mem.toDF(), "ts", Seq("value"), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("numprof")
-      .outputMode("append").start()
-    try {
-      mem.addData(Ev(t(1), "a", 2.0), Ev(t(2), "a", 4.0))
-      q.processAllAvailable()
-      mem.addData(Ev(t(900), "a", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("numprof").collect()
-      assert(rows.nonEmpty)
-      val r = rows.find(_.getAs[String]("col_name") == "value").get
-      assert(r.getAs[Long]("n") == 2L)
-      assert(r.getAs[Double]("mean") == 3.0)
-    } finally q.stop()
-  }
-
-  test("windowed multi-sketch profile: sketch state merges across " +
-      "micro-batches and matches the batch twin") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamProfiler.windowedSketchProfile(
-      mem.toDF(), "ts", Seq("value"), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("sketchprof")
-      .outputMode("append").start()
-    try {
-      // same window fed across TWO micro-batches: the per-window
-      // sketch buffer must survive in the state store and merge
-      mem.addData(Ev(t(1), "a", 2.0), Ev(t(2), "a", 4.0))
-      q.processAllAvailable()
-      mem.addData(Ev(t(3), "a", 4.0), Ev(t(4), "a", 9.0))
-      q.processAllAvailable()
-      // advance past the watermark to close the first window
-      mem.addData(Ev(t(4000), "a", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("sketchprof").collect()
-      val r = rows.find(_.getAs[String]("col_name") == "value").get
-      assert(r.getAs[Long]("n") == 4L)
-      assert(r.getAs[Long]("distinct_est") == 3L) // exact below k
-      assert(r.getAs[Double]("mean") == 4.75)
-      assert(r.getAs[Double]("min_val") == 2.0)
-      assert(r.getAs[Double]("max_val") == 9.0)
-      assert(r.getAs[Double]("median_est") == 4.0)
-      // batch twin over the same data, same aggregate
-      val batch = Seq(Ev(t(1), "a", 2.0), Ev(t(2), "a", 4.0),
-        Ev(t(3), "a", 4.0), Ev(t(4), "a", 9.0)).toDF()
-      val b = StreamProfiler.windowedSketchProfile(
-        batch, "ts", Seq("value")).collect().head
-      assert(b.getAs[Long]("n") == r.getAs[Long]("n"))
-      assert(b.getAs[Double]("mean") == r.getAs[Double]("mean"))
-      assert(b.getAs[Double]("median_est") ==
-        r.getAs[Double]("median_est"))
-    } finally q.stop()
-  }
-
-  test("windowed heavy hitters: MG state merges across micro-batches, " +
-      "guarantees hold") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val k = 2
-    val q = StreamProfiler.windowedHeavyHitters(mem.toDF(), "ts",
-        "event_type", k = k, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("hhprof")
-      .outputMode("append").start()
-    try {
-      // one window fed across two micro-batches: a×6, b×3, c×2, d×1
-      def evs(xs: (String, Int)*): Seq[Ev] = xs.zipWithIndex.flatMap {
-        case ((e, n), i) => Seq.fill(n)(Ev(t(i + 1), e, 1.0))
-      }
-      mem.addData(evs("a" -> 3, "b" -> 2): _*)
-      q.processAllAvailable()
-      mem.addData(evs("a" -> 3, "b" -> 1, "c" -> 2, "d" -> 1): _*)
-      q.processAllAvailable()
-      mem.addData(Ev(t(4000), "z", 1.0)) // close the window
-      q.processAllAvailable()
-      val r = spark.table("hhprof").collect()
-        .find(_.getAs[Long]("n") == 12L).get
-      val exact = Map("a" -> 6L, "b" -> 3L, "c" -> 2L, "d" -> 1L)
-      val est = r.getMap[String, Long](r.fieldIndex("items")).toMap
-      assert(est.size <= k)
-      est.foreach { case (it, e) =>
-        assert(e <= exact(it), s"overcount $it")
-        assert((exact(it) - e) * (k + 1) <= 12L, s"bound $it")
-      }
-      // a (6 of 12) is above n/(k+1)=4 → must be present
-      assert(est.contains("a"))
-    } finally q.stop()
-  }
-
-  test("hot-gram stream: MG boilerplate monitor merges across " +
-      "micro-batches and keeps the dominant gram") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamDoc]
-    val q = StreamProfiler.hotGramStream(mem.toDF(), "text",
-        n = 3, k = 8)
-      .writeStream.format("memory").queryName("hotgrams")
-      .outputMode("complete").start()
-    try {
-      // boilerplate in 16 of 20 docs: gram stream n = 16·5 + 4·4 =
-      // 96, bound n/(k+1) = 10.7 < 16 → the MG guarantee FORCES
-      // "all rights reserved" to survive the merge
-      val boiler = "all rights reserved legal notice"
-      mem.addData((1L to 16L).map(i =>
-        StreamDoc(i, s"$boiler unique$i tail$i")): _*)
-      q.processAllAvailable()
-      mem.addData((20L to 23L).map(i =>
-        StreamDoc(i, s"totally fresh text number $i here")): _*)
-      q.processAllAvailable()
-      val r = sql.table("hotgrams").collect().last
-      assert(r.getLong(r.fieldIndex("n_grams")) == 96L)
-      val items = r.getMap[String, Long](r.fieldIndex("items")).toMap
-      assert(items.size <= 8)
-      assert(items.contains("all rights reserved"), s"got $items")
-      // MG never overcounts; the batch report is the exact recount
-      val batch = graft.ops.TextStats.boilerplateGrams(
-        sql.table("hotgrams").sparkSession.createDataFrame(
-          (1L to 16L).map(i => (i, s"$boiler unique$i tail$i")) ++
-            (20L to 23L).map(i =>
-              (i, s"totally fresh text number $i here"))
-        ).toDF("doc_id", "text"), "doc_id", "text", n = 3, topK = 5)
-        .collect()
-      assert(batch.head.getString(1) == "all rights reserved")
-      assert(batch.head.getLong(2) == 16L)
-      assert(items("all rights reserved") <= 16L)
-    } finally q.stop()
-  }
-
-  test("windowed reference drift: each closed window equals the batch " +
-      "referenceDrift on that window's rows") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val ref = Seq("a" -> 3L, "b" -> 1L)
-    val q = StreamProfiler.windowedReferenceDrift(mem.toDF(), "ts",
-        col("event_type"), ref, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("refdrift")
-      .outputMode("append").start()
-    try {
-      // hour 0: a drifted mix (c is outside the reference buckets);
-      // hour 1: exactly the reference mix
-      val w0 = Seq(Ev(t(5), "a", 1.0), Ev(t(10), "b", 1.0),
-        Ev(t(20), "c", 1.0), Ev(t(30), "a", 1.0))
-      val w1 = Seq(Ev(t(65), "a", 1.0), Ev(t(70), "a", 1.0),
-        Ev(t(75), "a", 1.0), Ev(t(80), "b", 1.0))
-      mem.addData(w0 ++ w1: _*)
-      q.processAllAvailable()
-      mem.addData(Ev(t(4000), "a", 1.0)) // close both windows
-      q.processAllAvailable()
-      val out = spark.table("refdrift")
-        .orderBy("window_start_us").collect()
-      val r0 = out.find(_.getLong(0) == 0L).get
-      val r1 = out.find(_.getLong(0) == 3600000000L).get
-      // per-window equality with the batch twin
-      for ((row, slice) <- Seq(r0 -> w0, r1 -> w1)) {
-        val batch = graft.ops.Drift.referenceDrift(slice.toDF(), "w",
-          col("event_type"), ref).collect()(0)
-        for (f <- Seq("n_a", "n_b", "n_buckets"))
-          assert(row.getAs[Long](f) == batch.getAs[Long](f), f)
-        for (f <- Seq("psi", "tvd", "ks"))
-          assert(row.getAs[Double](f) == batch.getAs[Double](f), f)
-      }
-      // the reference-mix window scores zero drift; the drifted one
-      // does not
-      assert(r1.getAs[Double]("psi") == 0.0)
-      assert(r1.getAs[Double]("ks") == 0.0)
-      assert(r0.getAs[Double]("psi") > 0.0)
-    } finally q.stop()
-  }
-
-  test("native session_window aggregation: boundaries equal batch " +
-      "sessionize with end = last event + gap") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[UserEv]
-    val q = StreamProfiler.sessionWindowStats(mem.toDF(),
-        gap = "30 minutes", watermark = "10 minutes")
-      .writeStream.format("memory").queryName("sesswin")
-      .outputMode("append").start()
-    try {
-      // user 1: two sessions (0,10) and (60); user 2: one session
-      mem.addData(UserEv(t(0), 1L), UserEv(t(10), 1L),
-        UserEv(t(60), 1L), UserEv(t(5), 2L))
-      q.processAllAvailable()
-      mem.addData(UserEv(t(5000), 9L)) // close everything
-      q.processAllAvailable()
-      val out = spark.table("sesswin").collect()
-        .filter(_.getLong(0) < 9L)
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).sortBy(x => (x._1, x._2)).toSeq
-      val gapUs = 30L * 60L * 1000000L
-      val batch = graft.ops.EventOps.sessionize(
-          Seq((t(0), 1L), (t(10), 1L), (t(60), 1L), (t(5), 2L))
-            .zipWithIndex
-            .map { case ((ts, u), i) => (i.toLong, ts, u) }
-            .toDF("event_id", "ts", "user_id"))
-        .collect()
-        .map(r => (r.getLong(0), r.getAs[Long]("session_start_us"),
-          r.getAs[Long]("session_end_us") + gapUs,
-          r.getAs[Long]("n_events")))
-        .sortBy(x => (x._1, x._2)).toSeq
-      assert(out == batch)
-      assert(out.map(x => (x._1, x._4)).toSet ==
-        Set((1L, 2L), (1L, 1L), (2L, 1L)))
-    } finally q.stop()
-  }
-
-  test("sliding stream windows: one event lands in len/slide " +
-      "overlapping windows, matching the batch twin") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamProfiler.windowedStats(mem.toDF(),
-        watermark = "10 minutes", windowLen = "1 hour",
-        slide = Some("30 minutes"))
-      .writeStream.format("memory").queryName("slidewin")
-      .outputMode("append").start()
-    try {
-      mem.addData(Ev(t(40), "a", 2.0)) // 00:40 → windows 00:00, 00:30
-      q.processAllAvailable()
-      mem.addData(Ev(t(4000), "a", 1.0)) // close them
-      q.processAllAvailable()
-      val starts = spark.table("slidewin").collect()
-        .map(_.getLong(0)).filter(_ < 3600000000L).sorted.toSeq
-      assert(starts == Seq(0L, 1800000000L))
-      // batch twin emits the same two windows for the same event
-      val batch = graft.ops.EventOps.slidingWindowStats(
-          Seq(Ev(t(40), "a", 2.0)).toDF()
-            .withColumn("event_id", lit(1L)))
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(batch == starts)
-    } finally q.stop()
-  }
 
   test("streaming contamination guard flags arriving docs exactly " +
       "like the batch probe") {
@@ -466,399 +44,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("windowed quality checks: per-window suite merges across " +
-      "micro-batches and equals the batch twin on the window's rows") {
-    import graft.ops.Quality
-    import graft.ops.Quality._
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val checks = Seq(
-      Completeness("value", 1.0),
-      InRange("value", 0.0, 5.0, 1.0),
-      InSet("event_type", Seq("a", "b"), 1.0),
-      Uniqueness("event_type", 0.5),
-      MeanBetween("value", 0.0, 4.0),
-      RowCountBetween(1L, 100L))
-    val mem = MemoryStream[Ev]
-    val q = StreamProfiler.windowedQualityChecks(
-        mem.toDF(), "ts", checks, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("qchecks")
-      .outputMode("append").start()
-    try {
-      // one window fed across TWO micro-batches (state must merge);
-      // the 9.0 value makes in_range FAIL at 3/4
-      mem.addData(Ev(t(1), "a", 2.0), Ev(t(2), "b", 4.0))
-      q.processAllAvailable()
-      mem.addData(Ev(t(3), "a", 9.0), Ev(t(4), "a", 1.0))
-      q.processAllAvailable()
-      mem.addData(Ev(t(4000), "a", 1.0)) // close the window
-      q.processAllAvailable()
-      val streamRows = sql.table("qchecks").collect()
-        .filter(_.getAs[Long]("window_start_us") == 0L)
-        .map(r => (r.getAs[String]("check_type"),
-          r.getAs[String]("col_name"), r.getAs[Double]("observed"),
-          r.getAs[Long]("passed"))).toSet
-      val batchRows = Quality.runChecks(
-          Seq(Ev(t(1), "a", 2.0), Ev(t(2), "b", 4.0),
-            Ev(t(3), "a", 9.0), Ev(t(4), "a", 1.0)).toDF(),
-          checks, approxUnique = true)
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getDouble(2),
-          r.getLong(5))).toSet
-      assert(streamRows == batchRows)
-      val byType = streamRows.map(t4 => t4._1 -> t4).toMap
-      assert(byType("in_range")._4 == 0L)     // 0.75 < 1.0
-      assert(byType("completeness")._4 == 1L)
-      assert(byType("row_count")._3 == 4.0)
-    } finally q.stop()
-  }
-
-  test("windowed grouped reference drift: per (window, source) rows, " +
-      "only the drifted source is loud, and each equals the batch " +
-      "twin on its slice") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[GrpEv]
-    val ref = Seq("a" -> 3L, "b" -> 1L)
-    val q = StreamProfiler.windowedReferenceDriftByGroup(mem.toDF(),
-        "ts", "src", col("event_type"), ref,
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("grpdrift")
-      .outputMode("append").start()
-    try {
-      // source s1: the reference mix exactly; source s2: drifted
-      val w0 =
-        Seq(GrpEv(t(5), "s1", "a"), GrpEv(t(10), "s1", "a"),
-          GrpEv(t(20), "s1", "a"), GrpEv(t(30), "s1", "b"),
-          GrpEv(t(6), "s2", "b"), GrpEv(t(12), "s2", "b"),
-          GrpEv(t(22), "s2", "c"), GrpEv(t(32), "s2", "b"))
-      mem.addData(w0: _*)
-      q.processAllAvailable()
-      mem.addData(GrpEv(t(4000), "s1", "a")) // close the window
-      q.processAllAvailable()
-      val out = spark.table("grpdrift")
-        .where(col("window_start_us") === 0L)
-        .collect().map(r => r.getString(1) -> r).toMap
-      assert(out.keySet === Set("s1", "s2"))
-      assert(out("s1").getAs[Double]("psi") == 0.0,
-        "reference-mix source is quiet")
-      assert(out("s2").getAs[Double]("psi") > 0.5,
-        "drifted source is loud")
-      // per-group equality with the batch twin on that group's rows
-      for ((g, rows) <- w0.groupBy(_.src)) {
-        val batch = graft.ops.Drift.referenceDrift(
-          rows.map(e => Ev(e.ts, e.event_type, 1.0)).toDF(), "w",
-          col("event_type"), ref).collect()(0)
-        for (f <- Seq("n_a", "n_b", "n_buckets"))
-          assert(out(g).getAs[Long](f) == batch.getAs[Long](f),
-            s"$g.$f")
-        for (f <- Seq("psi", "tvd", "ks"))
-          assert(out(g).getAs[Double](f) == batch.getAs[Double](f),
-            s"$g.$f")
-      }
-    } finally q.stop()
-  }
-
-  test("stepStream: cross-batch steps come from per-user state; " +
-      "in-order feed reproduces the batch transition counts") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SideEv]
-    val q = StreamProfiler.stepStream(mem.toDF(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("steps")
-      .outputMode("append").start()
-    val evs = Seq(
-      SideEv(t(60), 1L, 1L, "A", 0.0), SideEv(t(61), 1L, 2L, "B", 0.0),
-      SideEv(t(62), 2L, 3L, "A", 0.0),
-      // batch 2: user 1 continues with C — the cross-batch step B→C
-      // only exists if the last-event state survived the boundary
-      SideEv(t(70), 1L, 4L, "C", 0.0), SideEv(t(71), 2L, 5L, "A", 0.0))
-    try {
-      mem.addData(evs(0), evs(1), evs(2))
-      q.processAllAvailable()
-      mem.addData(evs(3), evs(4))
-      q.processAllAvailable()
-      val out = spark.table("steps")
-        .select("user_id", "event_type", "next_type", "us").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-          r.getLong(3))).toSet
-      val min = 60000000L // µs
-      assert(out == Set(
-        (1L, "A", "B", 61L * min), (1L, "B", "C", 70L * min),
-        (2L, "A", "A", 71L * min)))
-      // the stream's grouped step counts equal the batch matrix's n
-      val streamCounts = out.toSeq
-        .groupBy(s => (s._2, s._3)).map { case (k, v) => k -> v.size }
-      val batch = graft.ops.EventOps.transitionMatrix(evs.toDF())
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          r.getAs[Long]("n").toInt).toMap
-      assert(streamCounts == batch)
-    } finally q.stop()
-  }
-
-  test("pathStream: 3-step journeys spanning the micro-batch " +
-      "boundary come from the two-event state, exactly once") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SideEv]
-    val q = StreamProfiler.pathStream(mem.toDF(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("paths")
-      .outputMode("append").start()
-    try {
-      // batch 1 ends mid-path: A,B buffered, nothing emitted yet
-      mem.addData(SideEv(t(60), 1L, 1L, "A", 0.0),
-        SideEv(t(61), 1L, 2L, "B", 0.0))
-      q.processAllAvailable()
-      assert(spark.table("paths").count() == 0L)
-      // batch 2: C completes A→B→C, D completes B→C→D
-      mem.addData(SideEv(t(62), 1L, 3L, "C", 0.0),
-        SideEv(t(63), 1L, 4L, "D", 0.0))
-      q.processAllAvailable()
-      val out = spark.table("paths")
-        .select("user_id", "t1", "t2", "t3", "us").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getLong(4))).toSet
-      val min = 60000000L
-      assert(out == Set((1L, "A", "B", "C", 62L * min),
-        (1L, "B", "C", "D", 63L * min)))
-    } finally q.stop()
-  }
-
-  test("windowed trend recovers a per-window line and matches the " +
-      "batch fit") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamProfiler
-      .windowedTrend(mem.toDF(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("wtrend")
-      .outputMode("append").start()
-    try {
-      // hour 0: y = 4·hours + 1 exactly at minutes 0, 15, 30, 45
-      val evs = Seq(0L, 15L, 30L, 45L).map(m =>
-        Ev(t(m), "lin", 4.0 * (m / 60.0) + 1.0))
-      mem.addData(evs: _*)
-      q.processAllAvailable()
-      mem.addData(Ev(t(2000), "z", 0.0)) // close hour 0
-      q.processAllAvailable()
-      val row = spark.table("wtrend")
-        .where(col("window_start_us") === 0L &&
-          col("event_type") === "lin").head()
-      assert(row.getLong(2) == 4L)
-      assert(math.abs(row.getDouble(3) - 4.0) < 1e-6, "slope")
-      assert(row.getDouble(4) == 1.0, "r2")
-      // batch central fit over the same rows agrees
-      val batch = graft.ops.EventOps.trendByType(evs.toDF())
-        .head()
-      assert(math.abs(batch.getDouble(2) - row.getDouble(3)) < 1e-6)
-    } finally q.stop()
-  }
-
-  test("windowed domain counts match the batch domain fold per window") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[UrlDoc]
-    val q = StreamProfiler
-      .windowedDomainCounts(mem.toDF(), "url", "text",
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("wdomains")
-      .outputMode("append").start()
-    try {
-      // hour 0: hub.com twice (www + cdn subdomains fold together),
-      // site9.net once
-      mem.addData(
-        UrlDoc(t(5), "https://www.hub.com/a", "x y z"),
-        UrlDoc(t(20), "https://cdn1.hub.com/b?q=1", "x y"),
-        UrlDoc(t(30), "https://site9.net/c", "x"))
-      q.processAllAvailable()
-      mem.addData(UrlDoc(t(2000), "https://z.io/d", "x")) // close hour 0
-      q.processAllAvailable()
-      val out = spark.table("wdomains")
-        .where(col("window_start_us") === 0L)
-        .select("domain", "n_docs", "n_tokens").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(out == Set(("hub.com", 2L, 5L), ("site9.net", 1L, 1L)))
-      // batch fold over the same rows agrees
-      val batch = graft.ops.UrlOps.withDomain(
-          Seq(("https://www.hub.com/a", "x y z"),
-            ("https://cdn1.hub.com/b?q=1", "x y"),
-            ("https://site9.net/c", "x")).toDF("url", "text"), "url")
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " ")).cast("long"))
-            .as("n_tokens"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(batch == out)
-    } finally q.stop()
-  }
-
-  test("windowed k-anonymity matches the batch audit per window") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamProfiler
-      .windowedKAnonymity(mem.toDF(), Seq("event_type"), k = 2L,
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("kanon")
-      .outputMode("append").start()
-    try {
-      // hour 0: "a" ×2 (safe at k=2), "b" ×1 (at risk)
-      mem.addData(Ev(t(5), "a", 1.0), Ev(t(20), "a", 1.0),
-        Ev(t(30), "b", 1.0))
-      q.processAllAvailable()
-      mem.addData(Ev(t(2000), "z", 0.0)) // close hour 0
-      q.processAllAvailable()
-      val out = spark.table("kanon").where(col("window_start_us") === 0L)
-        .select("event_type", "n", "risk", "at_risk").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-          r.getBoolean(3))).toSet
-      assert(out == Set(("a", 2L, 0.5, false), ("b", 1L, 1.0, true)))
-      // batch twin over the same closed-window rows
-      val batch = graft.ops.Privacy.kAnonymity(
-        Seq(("a", 1), ("a", 2), ("b", 3)).toDF("event_type", "i"),
-        Seq("event_type"), k = 2L)
-        .select("event_type", "n", "risk", "at_risk").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-          r.getBoolean(3))).toSet
-      assert(batch == out)
-    } finally q.stop()
-  }
-
-  test("knScoreStream scores a doc stream against a frozen KN model " +
-      "identically to the batch scorer") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val train = Seq((1L, "a b a b"), (2L, "a c"))
-      .toDF("doc_id", "text")
-    val lm = graft.ops.Search.knTrain(train, "doc_id", "text")
-    val mem = MemoryStream[TsDoc]
-    val q = StreamProfiler.knScoreStream(mem.toDF(), lm)
-      .writeStream.format("memory").queryName("knscore")
-      .outputMode("append").start()
-    try {
-      mem.addData(TsDoc(t(5), 10L, "a b"), TsDoc(t(20), 11L, "a a z q"))
-      q.processAllAvailable()
-      mem.addData(TsDoc(t(2000), 99L, "x y")) // close hour 0
-      q.processAllAvailable()
-      val out = spark.table("knscore")
-        .where(col("doc_id").isin(10L, 11L))
-        .select("doc_id", "n_bigrams", "nll", "ppl").collect()
-        .map(r => r.getLong(0) ->
-          (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-      val batch = graft.ops.Search.knBigramNll(train,
-          Seq((10L, "a b"), (11L, "a a z q")).toDF("doc_id", "text"),
-          "doc_id", "text")
-        .collect().map(r => r.getLong(0) ->
-          (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-      assert(out == batch)
-    } finally q.stop()
-  }
-
-  test("ruleGateStream counts first-failing rules per window, " +
-      "matching the batch funnel on the closed window's docs") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[TsDoc]
-    val q = StreamProfiler.ruleGateStream(mem.toDF(),
-        minTokens = 5L, maxTokens = 50L,
-        minMeanWordLen = 2.0, maxMeanWordLen = 10.0,
-        minStopwords = 1L, maxTopTokenFrac = 0.5)
-      .writeStream.format("memory").queryName("rulegate")
-      .outputMode("append").start()
-    try {
-      val docs = Seq(
-        (1L, "x y z"),                          // too_few_tokens
-        (2L, "the echo echo echo is echo"),     // repetitive
-        (3L, "the alpha is beta and gamma of delta")) // kept
-      mem.addData(docs.zipWithIndex.map { case ((id, tx), i) =>
-        TsDoc(t(5 + i), id, tx) }: _*)
-      q.processAllAvailable()
-      mem.addData(TsDoc(t(2000), 99L, "x")) // close hour 0
-      q.processAllAvailable()
-      val out = sql.table("rulegate")
-        .where(col("window_start") === new Timestamp(0L))
-        .select("rule", "n_docs").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(out == Map("too_few_tokens" -> 1L, "repetitive" -> 1L,
-        "kept" -> 1L))
-      // batch funnel over the same docs agrees on every nonzero row
-      val batch = graft.ops.QualityRules.filterFunnel(
-          docs.toDF("doc_id", "text"), "doc_id", "text",
-          minTokens = 5L, maxTokens = 50L,
-          minMeanWordLen = 2.0, maxMeanWordLen = 10.0,
-          minStopwords = 1L, maxTopTokenFrac = 0.5)
-        .where(col("n_docs") > 0)
-        .select("rule", "n_docs").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(batch == out)
-    } finally q.stop()
-  }
-
-  test("lrScoreStream scores a doc stream under a frozen PERSISTED " +
-      "model, matching the batch scorer's window stats") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val th = graft.ops.QualityRules.Thresholds(3L, 8L, 1.0, 9.0,
-      1L, 0.6)
-    val train = Seq((1L, "the cat sat on a mat"), (2L, "a b"),
-        (3L, "the a a a a a"), (4L, "is it a dog or cat"))
-      .toDF("doc_id", "text")
-    val m0 = graft.ops.Classifier.train(
-      graft.ops.Classifier.featurize(train, "doc_id", "text", th),
-      iters = 3)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_lr").toString + "/model"
-    graft.ops.Classifier.writeLrModel(m0, path, spark)
-    val m = graft.ops.Classifier.loadLrModel(spark, path)
-    // the persisted round trip is bit-exact
-    assert(m.mu.toSeq == m0.mu.toSeq &&
-      m.sigma.toSeq == m0.sigma.toSeq &&
-      m.weights.toSeq == m0.weights.toSeq)
-    val mem = MemoryStream[TsDoc]
-    val q = StreamProfiler.lrScoreStream(mem.toDF(), m, th)
-      .writeStream.format("memory").queryName("lrscore")
-      .outputMode("append").start()
-    try {
-      val docs = Seq((10L, "the cat sat on a mat"), (11L, "a b"))
-      mem.addData(docs.zipWithIndex.map { case ((id, tx), i) =>
-        TsDoc(t(5 + i), id, tx) }: _*)
-      q.processAllAvailable()
-      mem.addData(TsDoc(t(2000), 99L, "x")) // close hour 0
-      q.processAllAvailable()
-      val out = sql.table("lrscore")
-        .where(col("window_start") === new Timestamp(0L))
-        .select("n_docs", "avg_prob", "model_keep_share",
-          "gate_keep_share").collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
-          r.getDouble(3)))
-      // batch twin: the same docs through the batch featurize+score
-      val batch = graft.ops.Classifier.scored(
-          graft.ops.Classifier.featurize(docs.toDF("doc_id", "text"),
-            "doc_id", "text", th), m)
-        .agg(count(org.apache.spark.sql.functions.lit(1)).as("n"),
-          graft.det.Sig.sig5(avg(col("prob"))).as("ap"),
-          graft.det.Sig.sig5(avg(when(col("prob") >= 0.5, 1.0)
-            .otherwise(0.0))).as("mk"),
-          graft.det.Sig.sig5(avg(col("label").cast("double")))
-            .as("gk"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1),
-          r.getDouble(2), r.getDouble(3)))
-      assert(out.toSeq == batch.toSeq && out.head._1 == 2L)
-    } finally q.stop()
-  }
-
   test("loadLrModel fails loudly on a foreign feature layout") {
     val sql = spark
     import sql.implicits._
@@ -873,36 +58,6 @@ class StreamingSpec extends SparkSpec {
       graft.ops.Classifier.loadLrModel(spark, path)
     }
     assert(e.getMessage.contains("persisted model features"))
-  }
-
-  test("windowedCountMin emits the batch sketch's counters for the " +
-      "closed window (mergeable twin)") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[TsDoc]
-    val q = StreamProfiler.windowedCountMin(mem.toDF(), "text",
-        d = 2, w = 8)
-      .writeStream.format("memory").queryName("wcm")
-      .outputMode("append").start()
-    try {
-      val vals = Seq("x", "x", "y", "z", "x")
-      mem.addData(vals.zipWithIndex.map { case (v, i) =>
-        TsDoc(t(5 + i), i.toLong, v) }: _*)
-      q.processAllAvailable()
-      mem.addData(TsDoc(t(2000), 99L, "q")) // close hour 0
-      q.processAllAvailable()
-      val out = sql.table("wcm")
-        .where(col("window_start") === new Timestamp(0L))
-        .select("i", "b", "mc").collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val batch = graft.ops.CatStats.countMinSketch(
-          vals.toDF("text"), "text", d = 2, w = 8).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      assert(out == batch, s"stream $out != batch $batch")
-      // total mass per sketch row = events in the window
-      assert(out.collect { case ((0L, _), c) => c }.sum == 5L)
-    } finally q.stop()
   }
 
   test("Blocklist.filterDocs is streaming-compatible (stateless gate)") {
@@ -922,37 +77,6 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val kept = sql.table("blgate").collect().map(_.getLong(0)).toSet
       assert(kept == Set(0L, 3L))
-    } finally q.stop()
-  }
-
-  test("blocklistStatsStream matches batch termStats on the closed window") {
-    val sql = spark
-    import sql.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val terms = Seq("spark", "slow", "big data")
-    val docs = Seq(
-      TsDoc(t(5), 0L, "SPARK is slow slow"),
-      TsDoc(t(20), 1L, "clean text"),
-      TsDoc(t(40), 2L, "big data spark here"))
-    val mem = MemoryStream[TsDoc]
-    val q = StreamProfiler.blocklistStatsStream(mem.toDF(), terms)
-      .writeStream.format("memory").queryName("blstream")
-      .outputMode("append").start()
-    try {
-      mem.addData(docs: _*)
-      q.processAllAvailable()
-      mem.addData(TsDoc(t(2000), 99L, "closer")) // close hour 0
-      q.processAllAvailable()
-      val out = sql.table("blstream")
-        .where(col("window_start_us") === 0L)
-        .collect().map(r => r.getString(1) ->
-          ((r.getLong(2), r.getLong(3)))).toMap
-      val batch = graft.ops.Blocklist
-        .termStats(docs.toDF(), "text", terms).collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
-        .toMap
-      assert(out == batch, s"stream $out != batch $batch")
-      assert(out("slow") == ((2L, 1L)))
     } finally q.stop()
   }
 }

@@ -21,10 +21,9 @@ class WideTableSpec extends SparkSpec {
           (0 until 10).map(i => s"v${(r + i) % 7}"))
     }
     val df = spark.createDataFrame(rows.asJava, schema).repartition(4)
-    // scale config: HLL distinct (no 50-way expand), approx quantiles
-    val p = Profiler.profile(df, ProfilerConfig(
-      exactDistinct = false, exactQuantiles = false,
-      correlations = false))
+    // scale config: the one-scan fused profile (KMV distinct, GK
+    // quantiles and histograms)
+    val p = Profiler.profileFused(df, ProfilerConfig(correlations = false))
     assert(p.nvar == 50)
     assert(p.columns.size == 50)
     val n0 = p.columns.find(_.name == "n0").get
@@ -33,7 +32,8 @@ class WideTableSpec extends SparkSpec {
     assert(n0.histogram.map(_._2).sum == 2000L)
     val c0 = p.columns.find(_.name == "c0").get
     assert(c0.topValues.nonEmpty)
-    // exact config must also survive (count-distinct Expand at k=50)
+    // exact config must also survive (the long-form distinct pass at
+    // k=50)
     val pe = Profiler.profile(df.limit(500),
       ProfilerConfig(correlations = false))
     assert(pe.columns.size == 50)
@@ -105,11 +105,10 @@ class WideTableSpec extends SparkSpec {
         ((r * (i + 3) + i * 17) % 101).toDouble))
     }
     val df = spark.createDataFrame(rows.asJava, schema).repartition(4)
-    // pass A (1250 aggs), B (250 percentile aggs) and the histogram
-    // pass all exceed one chunk; results must merge seamlessly
-    val p = Profiler.profile(df, ProfilerConfig(
-      exactQuantiles = false, exactDistinct = false,
-      correlations = false))
+    // pass A (1250 aggs) exceeds one 600-expression chunk; pass B and
+    // the histogram pass are one long-form grouping each. Results must
+    // merge seamlessly
+    val p = Profiler.profile(df, ProfilerConfig(correlations = false))
     assert(p.nvar == k && p.columns.size == k)
     val last = p.columns.find(_.name == s"n${k - 1}").get
     assert(last.count == 200L)
