@@ -45,6 +45,7 @@ class ProfileReport(df: DataFrame,
   }
 
   /** Correlations from the profile when available, computed on demand
+    * by the profile's own pass-D function ([[graft.profiler.Stats.pearson]])
     * when the profile was built with correlations = false (so
     * getRejectedVariables never silently reports "nothing rejected"
     * for an unprofiled dimension). */
@@ -54,7 +55,7 @@ class ProfileReport(df: DataFrame,
     val fromProfile = getDescription.correlations
     if (fromProfile.nonEmpty || numCols.size < 2 || cfg.correlations)
       fromProfile.map { case (a, b, rho) => (a, b) -> Option(rho) }.toMap
-    else graft.profiler.Stats.collectCorrMatrix(df, numCols)
+    else graft.profiler.Stats.pearson(df, numCols)
   }
 
   /** Head sample rendered into the report (reference stores

@@ -17,7 +17,7 @@ import org.apache.spark.sql.graftbridge.GraftSql
   * Why not k(k−1)/2 built-in `corr` aggregates: their six-field
   * buffers blow the 64 KB codegen method limit around k ≈ 8 and the
   * whole aggregate falls back to interpreted eval (measured 6–20 s at
-  * sf0.1 — see Stats.corrMatrix). One imperative aggregate does one
+  * sf0.1). One imperative aggregate does one
   * update call per ROW with an O(k²) primitive-array inner loop — no
   * per-pair expression overhead, no codegen limit, and the buffer is
   * O(k²) doubles regardless of row count.
@@ -30,8 +30,9 @@ import org.apache.spark.sql.graftbridge.GraftSql
   *   merge:  Cᵢⱼ = Cᵢⱼᵃ + Cᵢⱼᵇ + δᵢδⱼ·nₐn_b/n
   *
   * Rows with ANY null among the k inputs are skipped — listwise
-  * deletion, matching `df.na.drop(cols)` in the two-pass
-  * Stats.corrMatrix this replaces on the fused path.
+  * deletion. Every Pearson and Spearman matrix in the repo is read off
+  * this buffer by Stats.corrFromCm (the oracle queries' reference
+  * `na.drop` also drops NaN rows before the scan).
   *
   * Input: one ArrayType(DoubleType) child (the k values, nulls
   * preserved). Output: struct(n, means[k], comoments[k(k+1)/2])

@@ -10,9 +10,11 @@ import org.apache.spark.sql.types._
   * one codegen'd call, no per-row array literal, no lambda.
   *
   * The map-only rank transform behind [[graft.profiler.Stats
-  * .spearmanApprox]]: an exact rank needs a full-column sort (a
-  * single-partition window at any scale); a grid rank needs one
-  * probe into an O(grid) double[] that rides with the expression.
+  * .gridRankCorr]] (spearmanApprox and the profile's Spearman pass)
+  * and the profile store's rank co-moments: an exact rank needs a
+  * full-column sort (a single-partition window at any scale); a grid
+  * rank needs one probe into an O(grid) double[] that rides with the
+  * expression.
   * The composed alternative (`size(filter(typedLit(grid), g -> g <
   * x))`) evaluates an interpreted lambda per grid point per row —
   * O(grid) work where a binary search does O(log grid) — and

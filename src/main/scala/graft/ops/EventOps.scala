@@ -95,7 +95,7 @@ object EventOps {
   /** Per-type linear trend of `value` over event time — the "which
     * metric is drifting, how fast, and is the fit real" monitoring
     * view (slope per hour, intercept at epoch, r²). Two-pass central
-    * computation (the corrMatrix precedent): means first (sig5-
+    * computation (the Stats.moments precedent): means first (sig5-
     * rounded so both engines center against identical literals),
     * then one aggregation of centered cross-products — no window, no
     * sort, two shuffles on the group key with map-side combine.

@@ -540,7 +540,7 @@ object ProfileStore {
     val merged = rows.map(r => CoMoment
         .deserializeBuf(r.getAs[Array[Byte]](0), numCols.size))
       .reduceLeft(_.mergeIn(_))
-    val rho = Profiler.corrFromCm(merged, numCols)
+    val rho = Stats.corrFromCm(merged, numCols)
     Stats.corrPairs(numCols).flatMap(p => rho(p).map(r => (p._1, p._2, r)))
   }
 

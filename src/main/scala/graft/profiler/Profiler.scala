@@ -6,7 +6,7 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CoMoment, CoMomentBuf, MultiSketch, MultiSketchBuf}
+import graft.functions.{MultiSketch, MultiSketchBuf}
 
 /** Profiler configuration, mirroring the reference's knobs
   * (spark_df_profiling/__init__.py::ProfileReport ≈L12–30:
@@ -216,10 +216,14 @@ object Profiler {
         // var/sd/skew/kurt come from pass A2's central sums: k×4
         // built-in moment aggregates would overflow the codegen
         // method-size limit and fall back to interpreted eval
+        // hmx: the histogram's upper bound, over non-NaN values (max
+        // orders NaN above every double; a NaN bound would make the
+        // bin width NaN and floor(NaN) = 0 would put every row in bin 0)
         Seq(avg(dbl(c)).as(s"mean__$c"), min(dbl(c)).as(s"min__$c"),
           max(dbl(c)).as(s"max__$c"), sum(dbl(c)).as(s"sum__$c"),
           coalesce(sum(when(dbl(c) === 0.0, 1L).otherwise(0L)), lit(0L))
-            .as(s"z__$c"))
+            .as(s"z__$c"),
+          max(when(!isnan(dbl(c)), dbl(c))).as(s"hmx__$c"))
       } ++
       dateColsS.flatMap { c =>
         Seq(unix_micros(min(col(c)).cast("timestamp")).as(s"dmn__$c"),
@@ -321,8 +325,10 @@ object Profiler {
     // overlap.
     val hCols = columns.filter(_.base == "NUM") ++
       columns.filter(_.base == "DATE")
+    val nanFreeMax =
+      numCols.map(c => c -> aDouble(s"hmx__$c").getOrElse(Double.NaN)).toMap
     withPool(5) { implicit ec =>
-      val fHist = Future { histogramPass(df, cfg.bins, hCols) }
+      val fHist = Future { histogramPass(df, cfg.bins, hCols, nanFreeMax) }
       val fFreq = Future { freqPass(df, cfg.topK) }
       val fCorr = Future { pearsonPass(df, cfg, numCols) }
       val fCatAssoc = Future { catAssocPass(df, cfg, columns) }
@@ -406,7 +412,7 @@ object Profiler {
         sketched.map(s => s.stats.name -> s.histogram).toMap,
         await(fFreq), numCols,
         scan.cm.fold(Map.empty[(String, String), Option[Double]])(
-          corrFromCm(_, numCols)),
+          Stats.corrFromCm(_, numCols)),
         await(fSpearman), await(fCatAssoc), sizeBytes(df))
     }
   }
@@ -445,44 +451,15 @@ object Profiler {
       quantiles), histogram, gk)
   }
 
-  /** ρ matrix of `cols` from an all-pairs co-moment buffer, sig5-
-    * rounded exactly as Stats.corrMatrix rounds in-plan; None for a
-    * pair with a zero-variance side. */
-  private[profiler] def corrFromCm(buf: CoMomentBuf, cols: Seq[String])
-      : Map[(String, String), Option[Double]] = {
-    val kN = cols.size
-    val idx = cols.zipWithIndex.toMap
-    Stats.corrPairs(cols).map { case (a, b) =>
-      val i = idx(a); val j = idx(b)
-      val cij = buf.c(CoMoment.triIndex(i, j, kN))
-      val cii = buf.c(CoMoment.triIndex(i, i, kN))
-      val cjj = buf.c(CoMoment.triIndex(j, j, kN))
-      val denom = math.sqrt(cii) * math.sqrt(cjj)
-      (a, b) -> (if (denom == 0.0 || denom.isNaN) None
-                 else Some(graft.det.Sig.sig5(cij / denom)))
-    }.toMap
-  }
-
-  /** Whole correlation matrix in ONE scan via the all-pairs streaming
-    * co-moment aggregate — used by [[profile]]'s pass D in place of
-    * the two-pass (means, then centered sums) Stats.corrMatrix plan.
-    * Values agree with the two-pass form to ~1e-12 relative before
-    * the shared sig5 rounding, and exactly after it (away from
-    * rounding-boundary measure zero). */
-  private def coMomentCorr(df: DataFrame, cols: Seq[String])
-      : Map[(String, String), Option[Double]] = {
-    val vals = array(cols.map(c => col(c).cast("double")): _*)
-    val r = df.agg(CoMoment.sketch(vals, cols.size).as("__cm")).first()
-    corrFromCm(ProfileStore.coMomentBuf(r.getStruct(0), cols.size), cols)
-  }
-
   /** Pass C histograms: one groupBy(col_idx, bin) over the long form
     * for the NUM and DATE columns (DATE as exact epoch-micros doubles,
     * < 2^53 — the date_histogram determinism argument), bounds from
-    * the columns' min/max; the grid fills the empty buckets after the
-    * collect. */
+    * the columns' min and, for NUM, `nanFreeMax` (the
+    * [[Stats.histogram]] rule: NaN values are binned nowhere and bound
+    * nothing); the grid fills the empty buckets after the collect. */
   private def histogramPass(df: DataFrame, bins: Int,
-      cols: Seq[ColumnStats]): Map[String, Seq[(Long, Long)]] = {
+      cols: Seq[ColumnStats], nanFreeMax: Map[String, Double])
+      : Map[String, Seq[(Long, Long)]] = {
     if (cols.isEmpty) return Map.empty
     tagPass(df, "passC-histograms")
     val hCols = cols.map(_.name)
@@ -490,7 +467,7 @@ object Profiler {
       cs.name -> cs.stats.getOrElse(if (cs.base == "NUM") num else date,
         Double.NaN)).toMap
     val mnMap = bound("min", "dmn")
-    val mxMap = bound("max", "dmx")
+    val mxMap = bound("max", "dmx") ++ nanFreeMax
     val dateCols = cols.filter(_.base == "DATE").map(_.name)
     val src =
       if (dateCols.isEmpty) df
@@ -527,13 +504,13 @@ object Profiler {
     }.toMap
   }
 
-  /** Pass D: the Pearson matrix in one co-moment scan (the
-    * oracle-parity two-pass plan lives on in Stats.corrMatrix, which
-    * the corr_matrix query declares directly). */
+  /** Pass D: the Pearson matrix in one co-moment scan
+    * ([[Stats.pearson]], the function the corr_matrix, corr_reject and
+    * table_kinds queries declare too). */
   private def pearsonPass(df: DataFrame, cfg: ProfilerConfig,
       numCols: Seq[String]): Map[(String, String), Option[Double]] =
     if (!cfg.correlations || numCols.size < 2) Map.empty
-    else { tagPass(df, "passD-pearson"); coMomentCorr(df, numCols) }
+    else { tagPass(df, "passD-pearson"); Stats.pearson(df, numCols) }
 
   /** Pass E (opt-in): pairwise Cramér's V over the columns the
     * assembly keeps as CAT with 1 < distinct ≤ 100 (a CAT column is
@@ -560,31 +537,27 @@ object Profiler {
   }
 
   /** Pass D2: the Spearman matrix over the numeric columns — the
-    * window-sort exact form under `cfg.exactSpearman`, else the
-    * map-only GK-grid approximation against `cuts` (pass B's grid, or
-    * the fused profile's GK summaries): one rank/co-moment pass. */
+    * window-sort exact ranks ([[Stats.spearmanRanked]]) under
+    * `cfg.exactSpearman`, else the map-only GK-grid approximation
+    * ([[Stats.gridRankCorr]]) against `cuts` (pass B's grid, or the
+    * fused profile's GK summaries): one rank/co-moment pass. */
   private def spearmanPass(df: DataFrame, cfg: ProfilerConfig,
       numCols: Seq[String], cuts: Map[String, Array[Double]])
       : Seq[(String, String, Double)] = {
     tagPass(df, "passD2-spearman")
+    def pairs(rho: Map[(String, String), Option[Double]]) =
+      rho.toSeq.collect { case ((a, b), Some(r)) => (a, b, r) }
+        .sortBy(t => (t._1, t._2))
     if (!cfg.spearman || numCols.size < 2) Seq.empty
     else if (cfg.exactSpearman)
-      Stats.spearmanMatrix(df, numCols).collect().toSeq.flatMap { r =>
-        if (r.isNullAt(2)) None
-        else Some((r.getString(0), r.getString(1), r.getDouble(2)))
-      }.sortBy(t => (t._1, t._2))
+      // collected rows (an ArraySeq) before: keep the type so the
+      // TableProfile prints as it did
+      pairs(Stats.pearson(Stats.spearmanRanked(df, numCols), numCols))
+        .to(scala.collection.immutable.ArraySeq)
     else {
       val usable = numCols.filter(c => cuts.get(c).exists(_.nonEmpty))
-      if (usable.size < 2) Seq.empty
-      else {
-        val ranked = df.na.drop(numCols).select(usable.map { c =>
-          graft.functions.GridRank.grid_rank(
-            col(c).cast("double"), cuts(c)).as(c)
-        }: _*)
-        coMomentCorr(ranked, usable).toSeq.collect {
-          case ((a, b), Some(rho)) => (a, b, rho)
-        }.sortBy(t => (t._1, t._2))
-      }
+      pairs(Stats.gridRankCorr(df.na.drop(numCols),
+        usable.map(c => (c, c, cuts(c)))))
     }
   }
 

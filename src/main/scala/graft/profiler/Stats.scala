@@ -377,7 +377,9 @@ object Stats {
   // to interpreted eval (observed 8.5 s vs ~0.7 s at sf0.1). The
   // two-pass central-moment form (mean first, then Σ(x−μ)^{2,3,4}) is
   // also numerically stable at any scale and matches the oracle's
-  // two-pass SQL formula.
+  // two-pass SQL formula. The moments are the profile's own
+  // [[momentsFromSums]] (pass A2), rounded on the driver by
+  // [[graft.det.Sig.sig5Col]], the scalar twin of the in-plan sig5.
   def moments(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs1 = cols.flatMap { c =>
       Seq(count(d(c)).as(s"n__$c"), avg(d(c)).as(s"mean__$c"),
@@ -385,47 +387,30 @@ object Stats {
         sum(d(c)).as(s"sum__$c"))
     }
     val first = df.agg(aggs1.head, aggs1.tail: _*).first()
-    val muMap = cols.map { c =>
-      val i = first.fieldIndex(s"mean__$c")
-      c -> (if (first.isNullAt(i)) None else Some(first.getDouble(i)))
-    }.toMap
-    val aggs2 = cols.flatMap { c =>
-      muMap(c) match {
-        case None =>
-          Seq(lit(null).cast("double").as(s"s2__$c"),
-            lit(null).cast("double").as(s"s3__$c"),
-            lit(null).cast("double").as(s"s4__$c"))
-        case Some(mu) => centralSumAggs(Seq(c -> mu))
+    def v(name: String): Option[Double] =
+      Option(first.getAs[Any](name)).map(_.asInstanceOf[Double])
+    val withMu = cols.flatMap(c => v(s"mean__$c").map(c -> _))
+    val sums =
+      if (withMu.isEmpty) Map.empty[String, Any]
+      else chunkedAgg(df, centralSumAggs(withMu), 600)
+    val spark = df.sparkSession
+    import spark.implicits._
+    val r5 = graft.det.Sig.sig5Col _
+    cols.map { c =>
+      val n = first.getAs[Long](s"n__$c")
+      val m = sums.get(s"s2__$c").fold(Map.empty[String, Double]) { s2 =>
+        val s = s2.asInstanceOf[Double]
+        def sN(k: Int) = sums(s"s${k}__$c").asInstanceOf[Double]
+        // Spark orders NaN above every double, so the SQL form's
+        // `m2 > 0` guard passed NaN through to skewness and kurtosis
+        momentsFromSums(n, s, sN(3), sN(4)) ++ (if (s.isNaN)
+          Map("sk" -> Double.NaN, "ku" -> Double.NaN) else Map.empty)
       }
-    }
-    // pass-1 results ride as literals so the returned plan contains
-    // only the pass-2 agg — exactly two scans (a crossJoin(r1, r2)
-    // would re-execute r1's full-scan agg on collection)
-    val row = df.agg(aggs2.head, aggs2.tail: _*)
-    def l1(name: String): Column = {
-      val i = first.fieldIndex(name)
-      if (first.isNullAt(i)) lit(null).cast("double")
-      else lit(first.getDouble(i))
-    }
-    val structs = cols.map { c =>
-      val nL = first.getLong(first.fieldIndex(s"n__$c"))
-      val n = lit(nL.toDouble)
-      val m2 = col(s"s2__$c") / n
-      val m3 = col(s"s3__$c") / n
-      val m4 = col(s"s4__$c") / n
-      struct(
-        lit(c).as("col_name"),
-        lit(nL).as("n"),
-        sig5(l1(s"mean__$c")).as("mean"),
-        l1(s"min__$c").as("min_val"),
-        l1(s"max__$c").as("max_val"),
-        sig5(l1(s"sum__$c")).as("sum_val"),
-        sig5(when(n > 1, col(s"s2__$c") / (n - 1))).as("variance"),
-        sig5(when(n > 1, sqrt(col(s"s2__$c") / (n - 1)))).as("stddev"),
-        sig5(when(m2 > 0, m3 / sqrt(m2 * m2 * m2))).as("skewness"),
-        sig5(when(m2 > 0, m4 / (m2 * m2) - 3.0)).as("kurtosis"))
-    }
-    tidy(row, structs)
+      (c, n, v(s"mean__$c").map(r5), v(s"min__$c"), v(s"max__$c"),
+        v(s"sum__$c").map(r5), m.get("var").map(r5), m.get("sd").map(r5),
+        m.get("sk").map(r5), m.get("ku").map(r5))
+    }.toDF("col_name", "n", "mean", "min_val", "max_val", "sum_val",
+      "variance", "stddev", "skewness", "kurtosis").orderBy("col_name")
   }
 
   // -------------------------------------------------------------------
@@ -1435,7 +1420,9 @@ object Stats {
   // -------------------------------------------------------------------
   // Pearson correlation matrix (R1): the reference runs O(k²) separate
   // `df.corr(a,b)` jobs after listwise na.drop (corr_matrix ≈L40–60).
-  // Here: ONE agg with all k(k−1)/2 corr expressions — a single scan.
+  // Here every Pearson — the profile's pass D, the fused and store
+  // profiles, corr_matrix, corr_reject, table_kinds and both Spearman
+  // forms — is ONE all-pairs co-moment buffer read by [[corrFromCm]].
   // -------------------------------------------------------------------
   def corrPairs(cols: Seq[String]): Seq[(String, String)] =
     for {
@@ -1443,20 +1430,61 @@ object Stats {
       j <- (i + 1) until cols.size
     } yield (cols(i), cols(j))
 
-  /** Spearman rank-correlation matrix — the monotonic twin of R1
-    * (pandas-profiling 1.x computed corr(method='spearman') beside
-    * Pearson; the Spark port's matrix kept only Pearson): transform
-    * every column to its AVERAGE rank (standard tie handling:
-    * rank() + (tie_count − 1)/2 — exact half-integer doubles, so the
-    * transform itself is bit-identical cross-engine), then run the
-    * same stable two-pass Pearson machinery over the ranks.
-    *
-    * Scale note: exact average ranks pay one full-column sort window
-    * per column (k single-partition sorts) — the audit/verification
-    * form, declared as the oracle query. [[spearmanApprox]] is the
-    * corpus path: a per-column GK quantile grid (one agg) + a
-    * map-only binary-search rank transform — no global sort
-    * anywhere, error O(1/grid + ε). */
+  /** ρ of every [[corrPairs]] pair of `cols` in ONE scan of the
+    * all-pairs streaming co-moment aggregate
+    * ([[graft.functions.CoMoment]]: stable at any mean/variance ratio,
+    * no per-pair expressions, no codegen limit at any k). Rows with a
+    * null among `cols` are skipped (listwise deletion). */
+  private[graft] def pearson(df: DataFrame, cols: Seq[String])
+      : Map[(String, String), Option[Double]] =
+    if (cols.size < 2) Map.empty
+    else {
+      val r = df.agg(graft.functions.CoMoment.sketch(
+        array(cols.map(d): _*), cols.size)).first()
+      corrFromCm(ProfileStore.coMomentBuf(r.getStruct(0), cols.size), cols)
+    }
+
+  /** ρ matrix of `cols` from their all-pairs co-moment buffer — the
+    * one place a correlation is computed from co-moments — sig5-
+    * rounded on the driver ([[graft.det.Sig.sig5]], the scalar twin of
+    * the oracle's rounding); None for a pair with a zero-variance
+    * side. */
+  private[profiler] def corrFromCm(buf: graft.functions.CoMomentBuf,
+      cols: Seq[String])
+      : Map[(String, String), Option[Double]] = {
+    val idx = cols.zipWithIndex.toMap
+    def cm(i: Int, j: Int) =
+      buf.c(graft.functions.CoMoment.triIndex(i, j, cols.size))
+    corrPairs(cols).map { case (a, b) =>
+      val i = idx(a); val j = idx(b)
+      val denom = math.sqrt(cm(i, i)) * math.sqrt(cm(j, j))
+      (a, b) -> (if (denom == 0.0 || denom.isNaN) None
+                 else Some(graft.det.Sig.sig5(cm(i, j) / denom)))
+    }.toMap
+  }
+
+  /** A ρ matrix as the (col_a, col_b, rho) frame the oracle queries
+    * declare. */
+  private def matrixFrame(df: DataFrame,
+      m: Map[(String, String), Option[Double]]): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    m.toSeq.map { case ((a, b), rho) => (a, b, rho) }
+      .toDF("col_a", "col_b", "rho").orderBy("col_a", "col_b")
+  }
+
+  /** Approximate Spearman: every (name, column, cuts) ranks `column`
+    * of the already-cleaned frame by binary search into its quantile
+    * cuts (the native [[graft.functions.GridRank]] expression — no
+    * sort, no window) as `name`, then [[pearson]] over the ranks, in
+    * the order given. */
+  private[profiler] def gridRankCorr(clean: DataFrame,
+      ranks: Seq[(String, String, Array[Double])])
+      : Map[(String, String), Option[Double]] =
+    pearson(clean.select(ranks.map { case (name, c, cuts) =>
+      graft.functions.GridRank.grid_rank(d(c), cuts).as(name)
+    }: _*), ranks.map(_._1))
+
   /** The exact average-rank transform feeding [[spearmanMatrix]] —
     * exposed for plan inspection (plan counts: OPTIMIZATION_r16.md §1).
     *
@@ -1487,55 +1515,52 @@ object Stats {
     }: _*)
   }
 
-  /** r16: the ranked frame is MATERIALIZED once before [[corrMatrix]]
-    * consumes it — corrMatrix's two chunked agg passes (means, then
-    * centered co-moments) would otherwise re-execute the whole
-    * single-partition window chain per pass (measured 2× the window
-    * cost at sf0.1). The frame is O(n·k) doubles; the exact-rank
-    * audit form is row-bounded by [[spearmanRouted]]'s dispatch at
-    * corpus scale, so the materialization is bounded too. */
-  def spearmanMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val ranked =
-      graft.ops.Materialize.materialize(spearmanRanked(df, cols))
-    // corrMatrix is eager (both chunked agg passes collect inside it)
-    // and returns a LOCAL relation, so the ranked blocks can be
-    // unpersisted as soon as it returns (advisor r16: repeated exact-
-    // Spearman audits otherwise accumulate localCheckpoint blocks
-    // until the ContextCleaner runs)
-    try corrMatrix(ranked, cols)
-    finally graft.ops.Materialize.release(ranked)
+  /** Spearman rank-correlation matrix — the monotonic twin of R1
+    * (pandas-profiling 1.x computed corr(method='spearman') beside
+    * Pearson; the Spark port's matrix kept only Pearson): every column
+    * to its exact AVERAGE rank ([[spearmanRanked]]), then [[pearson]]
+    * over the ranks — one scan of the window chain.
+    *
+    * Scale note: exact average ranks pay one full-column sort window
+    * per column (k single-partition sorts) — the audit/verification
+    * form, declared as the oracle query. [[spearmanApprox]] is the
+    * corpus path: a per-column GK quantile grid (one agg) + a
+    * map-only binary-search rank transform — no global sort
+    * anywhere, error O(1/grid + ε). */
+  def spearmanMatrix(df: DataFrame, cols: Seq[String]): DataFrame =
+    matrixFrame(df, pearson(spearmanRanked(df, cols), cols))
+
+  /** Per-column `grid`+1-point GK quantile cuts (p = 0, 1/grid, …, 1)
+    * in ONE chunked agg.
+    * r16: GK accuracy O(grid), not 10000 — the cuts only need rank
+    * resolution ~1/grid, so accuracy 2·grid keeps GK ε at half a
+    * lattice step while an over-resolved sketch pays compression
+    * churn across grid+1 query points (measured on the spearmanRouted
+    * scale arm: sf100 240→43 s). ρ error stays O(1/grid) — an order of
+    * magnitude inside the 0.05 contract bound checked by
+    * corr_spearman_approx_err. */
+  private def gridCuts(df: DataFrame, cols: Seq[String], grid: Int)
+      : Map[String, Array[Double]] = {
+    val ps = (0 to grid).map(_.toDouble / grid)
+    val acc = math.max(2 * grid, 1000)
+    val row = chunkedAgg(df, cols.map(c =>
+      percentile_approx(d(c), typedLit(ps), lit(acc)).as(c)), 300)
+    cols.map(c => c -> row(c).asInstanceOf[scala.collection.Seq[Any]]
+      .map(_.asInstanceOf[Double]).toArray).toMap
   }
 
   /** Map-only approximate Spearman: ranks estimated by binary search
-    * into a per-column `grid`-point GK quantile lattice (collected in
-    * ONE chunked agg, broadcast as literals into the native
-    * [[graft.functions.GridRank]] expression), then the two-pass
-    * Pearson over the estimated rank fractions. No sort, no window,
-    * no shuffle beyond the aggregations — survives any corpus size.
+    * into a per-column `grid`-point GK quantile lattice
+    * ([[gridCuts]]), then [[gridRankCorr]]. No sort, no window, no
+    * shuffle beyond the aggregations — survives any corpus size.
     * Rank error is O(1/grid + GK ε), which perturbs ρ by about the
     * same order — fine for the profiling use (detecting monotonic
     * association), not for hypothesis-test precision. */
   def spearmanApprox(df: DataFrame, cols: Seq[String],
       grid: Int = 1024): DataFrame = {
     val clean = df.na.drop(cols)
-    val ps = (0 to grid).map(_.toDouble / grid)
-    // r16: GK accuracy O(grid), not 10000 — the cuts only need rank
-    // resolution ~1/grid, so accuracy 2·grid keeps GK ε at half a
-    // lattice step while an over-resolved sketch pays compression
-    // churn across grid+1 query points (the same reasoning measured
-    // on the spearmanRouted scale arm: sf100 240→43 s). ρ error stays
-    // O(1/grid) — an order of magnitude inside the 0.05 contract
-    // bound checked by corr_spearman_approx_err.
-    val acc = math.max(2 * grid, 1000)
-    val aggs = cols.map(c =>
-      percentile_approx(d(c), typedLit(ps), lit(acc)).as(c))
-    val row = chunkedAgg(clean, aggs, 300)
-    val ranked = clean.select(cols.map { c =>
-      val cuts = row(c).asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[Double]).toArray
-      graft.functions.GridRank.grid_rank(d(c), cuts).as(c)
-    }: _*)
-    corrMatrix(ranked, cols)
+    val cuts = gridCuts(clean, cols, grid)
+    matrixFrame(df, gridRankCorr(clean, cols.map(c => (c, c, cuts(c)))))
   }
 
   /** The approx-Spearman error CONTRACT as data (the
@@ -1574,9 +1599,9 @@ object Stats {
     * The scale arm is FUSED (r15): the `grid`/2 lattice is exactly
     * the even-index subset of the `grid` lattice, so ONE GK premise
     * serves both, and both rank matrices come out of a single
-    * [[corrMatrix]] call over the 2k fine+coarse rank columns — one
-    * quantile scan plus corrMatrix's two co-moment scans, versus the
-    * naive two-approx form's doubled GK work and six scans (measured
+    * [[gridRankCorr]] call over the 2k fine+coarse rank columns — one
+    * quantile scan plus one co-moment scan, versus the naive
+    * two-approx form's doubled GK work and six scans (measured
     * 22.8×/decade at the 600M-row tier before the fusion, the count
     * scan and GK dominating).
     * The production VALUE path at corpus scale stays
@@ -1612,39 +1637,19 @@ object Stats {
         if (n <= premiseRows) clean
         else clean.sample(withReplacement = false,
           premiseRows.toDouble / n, seed = 42L)
-      val ps = (0 to grid).map(_.toDouble / grid)
-      val acc = math.max(2 * grid, 1000)
-      val aggs = cols.map(c =>
-        percentile_approx(d(c), typedLit(ps), lit(acc)).as(c))
-      val row = chunkedAgg(premiseDf, aggs, 300)
-      def cuts(c: String): Array[Double] =
-        row(c).asInstanceOf[scala.collection.Seq[Any]]
-          .map(_.asInstanceOf[Double]).toArray
-      val ranked = clean.select(cols.flatMap { c =>
-        val fine = cuts(c)
-        val coarse = fine.indices.collect {
-          case i if i % 2 == 0 => fine(i) }.toArray
-        Seq(graft.functions.GridRank.grid_rank(d(c), fine)
-            .as(s"${c}__f"),
-          graft.functions.GridRank.grid_rank(d(c), coarse)
-            .as(s"${c}__c"))
-      }: _*)
-      val m = corrMatrix(ranked,
-        cols.map(c => s"${c}__f") ++ cols.map(c => s"${c}__c"))
-      def strip(side: String) = m
-        .where(col("col_a").endsWith(side) &&
-          col("col_b").endsWith(side))
-        .select(
-          expr(s"substring(col_a, 1, length(col_a) - 3)").as("col_a"),
-          expr(s"substring(col_b, 1, length(col_b) - 3)").as("col_b"),
-          col("rho"))
-      strip("__f").withColumnRenamed("rho", "rho_fine")
-        .join(strip("__c").withColumnRenamed("rho", "rho_coarse"),
-          Seq("col_a", "col_b"))
-        .select(col("col_a"), col("col_b"),
-          (abs(col("rho_fine") - col("rho_coarse")) < bound)
-            .as("within_bound"))
-        .orderBy("col_a", "col_b")
+      val cuts = gridCuts(premiseDf, cols, grid)
+      val m = gridRankCorr(clean,
+        cols.map(c => (s"${c}__f", c, cuts(c))) ++ cols.map { c =>
+          (s"${c}__c", c, cuts(c).indices.collect {
+            case i if i % 2 == 0 => cuts(c)(i) }.toArray)
+        })
+      val spark = df.sparkSession
+      import spark.implicits._
+      corrPairs(cols).map { case (a, b) =>
+        def rho(side: String) = m((s"$a$side", s"$b$side"))
+        (a, b, for (f <- rho("__f"); c <- rho("__c"))
+          yield math.abs(f - c) < bound)
+      }.toDF("col_a", "col_b", "within_bound").orderBy("col_a", "col_b")
     }
   }
 
@@ -1730,57 +1735,10 @@ object Stats {
     perPair.reduce(_.unionByName(_)).orderBy("col_x", "col_y")
   }
 
-  def corrMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val clean = df.na.drop(cols) // listwise deletion, mirroring reference
-    val pairs = corrPairs(cols)
-    // Why not k(k−1)/2 built-in `corr` aggs: their 6-field buffers
-    // blow the 64 KB codegen method limit at k=8 → interpreted eval
-    // (observed 6–20 s at sf0.1). Why not raw power sums
-    // (n·Σxy − Σx·Σy): catastrophic cancellation for large-mean/
-    // small-variance columns (epoch-like values lose the entire
-    // variance signal below double precision). So: TWO passes of
-    // simple codegen'd sums — means first, then centered co-moments
-    // Σ(dx·dy)/Σdx²/Σdy² with the means as literals. Numerically
-    // stable at any scale; divergence vs the oracle's corr() is
-    // ~1e-12 relative, far inside the sig5 bucket.
-    // both passes run CHUNKED (k mean aggs, then k + k(k−1)/2 sum
-    // aggs): at k columns the pair sums alone are O(k²) expressions —
-    // a single Aggregate plan stops being viable around k ≈ 100. Raw
-    // ρ is assembled driver-side from the collected sums (sqrt /
-    // multiply / divide are single correctly-rounded IEEE ops —
-    // bit-identical to the previous in-plan form) and the canonical
-    // sig5 expression is applied in the returned plan so oracle
-    // rounding parity is untouched.
-    val muMap = chunkedAgg(clean, cols.map(c => avg(d(c)).as(c)), 600)
-    val mu = cols.map { c =>
-      c -> Option(muMap(c)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-    }.toMap
-    def dev(c: String): Column = d(c) - lit(mu(c))
-    val aggs =
-      cols.map(c => sum(dev(c) * dev(c)).as(s"ss__$c")) ++
-      pairs.zipWithIndex.map { case ((a, b), i) =>
-        sum(dev(a) * dev(b)).as(s"sp__$i")
-      }
-    val m = chunkedAgg(clean, aggs, 600)
-    def get(name: String): Option[Double] =
-      Option(m(name)).map(_.asInstanceOf[Double])
-    val rows: Seq[(String, String, Option[Double])] =
-      pairs.zipWithIndex.map { case ((a, b), i) =>
-        val raw = for {
-          ssa <- get(s"ss__$a")
-          ssb <- get(s"ss__$b")
-          sp <- get(s"sp__$i")
-          denom = math.sqrt(ssa) * math.sqrt(ssb)
-          if denom != 0.0
-        } yield sp / denom
-        (a, b, raw)
-      }
-    val spark = df.sparkSession
-    import spark.implicits._
-    rows.toDF("col_a", "col_b", "raw")
-      .select(col("col_a"), col("col_b"), sig5(col("raw")).as("rho"))
-      .orderBy("col_a", "col_b")
-  }
+  /** The corr_matrix query: [[pearson]] after the reference's
+    * listwise `na.drop` (which also drops NaN rows). */
+  def corrMatrix(df: DataFrame, cols: Seq[String]): DataFrame =
+    matrixFrame(df, pearson(df.na.drop(cols), cols))
 
   /** Correlation rejection (R2): a column is rejected when its sig5'd
     * Pearson ρ with any EARLIER column (schema order, mirroring the
@@ -1792,18 +1750,9 @@ object Stats {
       : DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val m = collectCorrMatrix(df, cols)
-    rejectFromMatrix(cols, m, threshold)
+    rejectFromMatrix(cols, pearson(df.na.drop(cols), cols), threshold)
       .toDF("col_name", "correlated_with", "rho").orderBy("col_name")
   }
-
-  /** Collected (col_a, col_b) → ρ matrix (upper triangle). */
-  def collectCorrMatrix(df: DataFrame, cols: Seq[String])
-      : Map[(String, String), Option[Double]] =
-    corrMatrix(df, cols).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        Option(r.get(2)).map(_.asInstanceOf[Double]))
-      .toMap
 
   /** Order-dependent rejection over a collected matrix — shared by
     * the corr_reject query, Profiler, and
@@ -1857,31 +1806,25 @@ object Stats {
   /** Overview variable-type breakdown (upstream's overview panel
     * counts variables per profile kind — NUM/CAT/DATE/CONST/UNIQUE/
     * CORR, base.py::to_html ≈L400–470) by the profile's own
-    * [[Kinds.kind]] rule. One cnt/distinct agg + the (O(k²)-cell)
-    * correlation pass; every collected result is O(k),
+    * [[Kinds.kind]] rule, from the statistics the exact profile
+    * assigns kinds with: [[exactDistinctPerCol]] (pass A-distinct)
+    * and [[pearson]] (pass D). Every collected result is O(k),
     * scale-independent. */
   def kindCounts(df: DataFrame, cols: Seq[String],
       corrThreshold: Double = 0.9): DataFrame = {
-    val aggs = count(lit(1)).as("__n") +: cols.flatMap { c =>
-      Seq(count(col(c)).as(s"cnt__$c"),
-        countDistinct(orderable(df, c)).as(s"dis__$c"))
-    }
-    val a = df.agg(aggs.head, aggs.tail: _*).first()
+    val cd = exactDistinctPerCol(df, cols)
     val numCols = cols.filter(c => Kinds.isNumeric(df.schema(c).dataType))
-    val rejected: Set[String] =
-      if (numCols.size < 2) Set.empty
-      else rejectFromMatrix(numCols,
-        collectCorrMatrix(df, numCols), corrThreshold).map(_._1).toSet
+    val rejected = rejectFromMatrix(numCols, pearson(df, numCols),
+      corrThreshold).map(_._1).toSet
     val kindsByCol = cols.map { c =>
-      Kinds.kind(Kinds.baseKind(df.schema(c).dataType),
-        a.getAs[Long](s"cnt__$c"), a.getAs[Long](s"dis__$c"),
-        rejected.contains(c))
+      Kinds.kind(Kinds.baseKind(df.schema(c).dataType), cd(c)._1,
+        cd(c)._2, rejected.contains(c))
     }
     val byKind = kindsByCol.groupBy(identity).view.mapValues(_.size.toLong)
     val kindCols = Seq("NUM", "CAT", "DATE", "CONST", "UNIQUE", "CORR")
       .map(k => lit(byKind.getOrElse(k, 0L)).as(s"n_${k.toLowerCase}"))
     df.sparkSession.range(1).select(
-      lit(a.getAs[Long]("__n")).as("n") +:
+      lit(df.count()).as("n") +:
         lit(cols.size.toLong).as("nvar") +: kindCols: _*)
   }
 

@@ -153,7 +153,7 @@ object Core {
     "corr_matrix" -> ((s, dir) => Stats.corrMatrix(li(s, dir), nums)),
     // Spearman twin (pandas-profiling 1.x computed both): average
     // ranks (exact half-integer doubles, bit-identical cross-engine)
-    // then the same two-pass Pearson; declared over the float cols —
+    // then the same co-moment Pearson; declared over the float cols —
     // the int keys' rank transform exercises nothing extra and k=4
     // keeps the window-sort audit form cheap
     "corr_spearman" -> ((s, dir) =>

@@ -46,6 +46,19 @@ class ProfilerSpec extends SparkSpec {
       Seq("col_name", "metric", "value_num", "value_str"))
   }
 
+  test("exact histogram of a NUM column holding a NaN equals " +
+      "Stats.histogram's bins") {
+    val s1 = StructType(Seq(StructField("v", DoubleType)))
+    val d1 = spark.createDataFrame(((1 to 10).map(i => Row(i.toDouble)) :+
+      Row(Double.NaN)).asJava, s1)
+    val want = graft.profiler.Stats.histogram(d1, Seq("v")).collect()
+      .map(r => (r.getAs[Long]("bin"), r.getAs[Long]("cnt"))).toSeq
+    assert(want == (0L until 10L).map(b => (b, 1L)))
+    val col = Profiler.profile(d1).columns.head
+    assert(col.histogram == want)
+    assert(col.stats("max").isNaN, "the reported max keeps the NaN")
+  }
+
   test("SparkEntry.entry returns the tidy profile of lineitem") {
     assume(new java.io.File(LongFormFixtures.lineitem).exists)
     val out = SparkEntry.entry(spark)

@@ -103,6 +103,46 @@ class StatsSpec extends SparkSpec {
     assert(!rho.isNaN && math.abs(rho) <= 1.0)
   }
 
+  test("pearson equals a naive Pearson over collect(): listwise " +
+      "deletion, epoch-like magnitudes, constant column") {
+    val s = StructType(Seq(StructField("x", DoubleType),
+      StructField("y", DoubleType), StructField("t", DoubleType),
+      StructField("k", DoubleType)))
+    // t: epoch seconds with small jitter; k: constant; every 9th row
+    // has a null in x or y, which drops the whole row for every pair
+    val d2 = df((1 to 400).map { i =>
+      val x = if (i % 9 == 0) null else (i % 23).toDouble
+      val y = if (i % 9 == 4) null else 0.5 * (i % 23) + (i * 7 % 13)
+      Row(x, y, 1.7e9 + (i * 31 % 17).toDouble + 0.25 * (i % 3), 3.0)
+    }, s)
+    val cols = Seq("x", "y", "t", "k")
+    val kept = d2.collect().toSeq.filter(r => cols.indices.forall(i =>
+      !r.isNullAt(i))).map(r => cols.indices.map(r.getDouble))
+    def naive(i: Int, j: Int): Option[Double] = {
+      val n = kept.size.toDouble
+      val mi = kept.map(_(i)).sum / n
+      val mj = kept.map(_(j)).sum / n
+      val sij = kept.map(r => (r(i) - mi) * (r(j) - mj)).sum
+      val sii = kept.map(r => (r(i) - mi) * (r(i) - mi)).sum
+      val sjj = kept.map(r => (r(j) - mj) * (r(j) - mj)).sum
+      Option.when(sii > 0 && sjj > 0)(sij / math.sqrt(sii * sjj))
+    }
+    assert(kept.size < 400 && kept.size > 300)
+    val m = Stats.pearson(d2, cols)
+    assert(m.keySet == Stats.corrPairs(cols).toSet)
+    for (i <- cols.indices; j <- (i + 1) until cols.size) {
+      val got = m((cols(i), cols(j)))
+      naive(i, j) match {
+        case None => assert(got.isEmpty, s"${cols(i)}/${cols(j)}")
+        case Some(want) =>
+          assert(got.exists(g => math.abs(g - want) <= 1e-4 * math.abs(want)
+            + 1e-9), s"${cols(i)}/${cols(j)}: $got vs $want")
+      }
+    }
+    assert(m(("x", "y")).exists(_ > 0.3), "the x/y pair is correlated")
+    assert(m(("t", "k")).isEmpty && m(("x", "k")).isEmpty)
+  }
+
   test("histogram: constant column lands in a single bin 0") {
     val d2 = df(Seq(Row(5.0), Row(5.0), Row(5.0)),
       StructType(Seq(StructField("x", DoubleType))))
@@ -206,6 +246,28 @@ class StatsSpec extends SparkSpec {
     assert(r.getAs[Long]("n_const") == 1L)
     assert(r.getAs[Long]("n_unique") == 1L)
     assert(r.getAs[Long]("n_corr") == 1L)
+  }
+
+  test("kindCounts equals the tally of the exact profile's kinds") {
+    val s = StructType(Seq(StructField("id", LongType),
+      StructField("x", DoubleType), StructField("x3", DoubleType),
+      StructField("k", StringType), StructField("c", StringType),
+      StructField("ts", TimestampType)))
+    // id UNIQUE (a mod-41 permutation, uncorrelated with x), x3 = 3x
+    // CORR, c CONST, k CAT, ts DATE, x NUM (with a null)
+    val d2 = df((1 to 40).map(i => Row(((i * 17) % 41).toLong,
+      if (i == 5) null else (i % 20).toDouble, 3.0 * (i % 20),
+      if (i % 3 == 0) "a" else "b", "K",
+      new java.sql.Timestamp((i % 6) * 3600000L))), s)
+    val kinds = graft.profiler.Profiler.profile(d2).columns.map(_.kind)
+    assert(kinds.toSet == Set("UNIQUE", "NUM", "CORR", "CAT", "CONST",
+      "DATE"))
+    val r = Stats.kindCounts(d2, d2.columns.toSeq).collect().head
+    assert(r.getAs[Long]("n") == 40L && r.getAs[Long]("nvar") == 6L)
+    Seq("NUM", "CAT", "DATE", "CONST", "UNIQUE", "CORR").foreach { k =>
+      assert(r.getAs[Long](s"n_${k.toLowerCase}") == kinds.count(_ == k),
+        k)
+    }
   }
 
   test("quantilesByDtype: int column exact-interpolated, float column " +
